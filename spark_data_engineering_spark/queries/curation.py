@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from spark_data_engineering_spark.cacheutil import scratch_dir
 from spark_data_engineering_spark.functions import numeric as NR
 from spark_data_engineering_spark.functions import text as TX
 from spark_data_engineering_spark.queries.sampling import lcg_bucket
@@ -648,14 +649,7 @@ def export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale use ``repartition(n, "shard")`` for multiple files per
     shard), one read-back aggregate scan for the manifest — the
     standard export-then-verify pattern for corpus delivery."""
-    import os as _os
-    import tempfile
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    _os.makedirs("/tmp/spark_de_export", exist_ok=True)
-    sweep_stale("/tmp/spark_de_export")
-    out = tempfile.mkdtemp(prefix="shards-", dir="/tmp/spark_de_export")
+    out = scratch_dir("export", prefix="shards-")
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id",
         "text",
@@ -752,14 +746,7 @@ def export_shuffled_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform, so shards balance), one read-back aggregate, and an
     N_SHARDS-row window — the corpus itself is never globally sorted or
     row-numbered on one machine."""
-    import os as _os
-    import tempfile
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    _os.makedirs("/tmp/spark_de_export", exist_ok=True)
-    sweep_stale("/tmp/spark_de_export")
-    out = tempfile.mkdtemp(prefix="shuffled-", dir="/tmp/spark_de_export")
+    out = scratch_dir("export", prefix="shuffled-")
     skey = shuffle_key(F.col("doc_id"))
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id",
@@ -845,14 +832,7 @@ def export_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard key for the write, one read-back scan for the manifest; the
     JSON codec is JVM-side (native ``json`` writer/reader), and the
     explicit read schema avoids an inference pass over the export."""
-    import os as _os
-    import tempfile
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    _os.makedirs("/tmp/spark_de_export", exist_ok=True)
-    sweep_stale("/tmp/spark_de_export")
-    out = tempfile.mkdtemp(prefix="jsonl-", dir="/tmp/spark_de_export")
+    out = scratch_dir("export", prefix="jsonl-")
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id",
         "text",
@@ -942,15 +922,10 @@ def export_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass reads each tar once, in parallel, member-walking without
     extraction."""
     import os as _os
-    import tempfile
 
     import pandas as _pd
 
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    _os.makedirs("/tmp/spark_de_export", exist_ok=True)
-    sweep_stale("/tmp/spark_de_export")
-    out = tempfile.mkdtemp(prefix="wds-", dir="/tmp/spark_de_export")
+    out = scratch_dir("export", prefix="wds-")
 
     def write_shard(pdf: _pd.DataFrame) -> _pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])

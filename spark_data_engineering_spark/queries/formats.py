@@ -3,8 +3,8 @@ aggregation must produce the same hash whether the events arrive as
 parquet (the native testdata), JSON-lines (how crawl/event feeds
 actually land), or ORC (the other columnar format Spark ships).
 
-Each query stages a one-time converted copy of the events table keyed
-on the source file's identity, reads it back with an EXPLICIT schema
+Each query stages a one-time converted copy of the events table (a
+cached build, see cacheutil), reads it back with an EXPLICIT schema
 (never schema inference — at 100 TB an inference pass is a full extra
 scan, and inferred types drift between files), and runs the identical
 aggregation. Timestamps cross the JSON boundary as ISO-8601 strings
@@ -13,12 +13,10 @@ the gate proves the round-trip is lossless at micros precision."""
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_data_engineering_spark.cacheutil import cached, scratch_dir
 from spark_data_engineering_spark.functions import numeric as NR
 from spark_data_engineering_spark.registry import query
 from spark_data_engineering_spark.sources import load_table
@@ -34,24 +32,24 @@ _HOURLY_ORACLE = """
 
 
 def _staged(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"{fmt}:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_fmt/{fmt}/{digest}"
-    if not os.path.isdir(staged):
+    """Path of the events table staged in ``fmt`` (json, csv, orc or
+    xml), written on first use."""
+
+    def build(tmp: str) -> None:
         ev = load_table(spark, "events", sf_dir)
-        if fmt in ("json", "csv"):
-            # neither format carries a timestamp type: ship ISO strings
+        if fmt != "orc":
+            # none of these formats carries a timestamp type: ship ISO strings
             ev = ev.withColumn(
                 "ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
             )
-        w = ev.repartition(4).write.mode("overwrite")
+        w = ev.repartition(4).write
         if fmt == "csv":
             w = w.option("quote", '"').option("escape", '"')
-        w.format(fmt).save(staged)
-    return staged
+        if fmt == "xml":
+            w = w.option("rootTag", "events").option("rowTag", "event")
+        w.format(fmt).save(tmp)
+
+    return cached(f"fmt/{fmt}", fmt, sf_dir, build, tables=("events",))
 
 
 def _hourly(df: DataFrame) -> DataFrame:
@@ -125,24 +123,7 @@ def xml_events_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus type drift), parsed to micros, and aggregated — must hash the
     same oracle as the parquet original, proving the round-trip
     lossless."""
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"xml:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_fmt/xml/{digest}"
-    if not os.path.isdir(staged):
-        ev = load_table(spark, "events", sf_dir).withColumn(
-            "ts", F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-        )
-        (
-            ev.repartition(4)
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rootTag", "events")
-            .option("rowTag", "event")
-            .save(staged)
-        )
+    staged = _staged(spark, sf_dir, "xml")
     schema = (
         "event_id bigint, ts string, user_id bigint, event_type string, "
         "value double, props string"
@@ -197,21 +178,10 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit read schema keeps the reader off the inference pass."""
     from spark_data_engineering_spark.functions import text as TX
 
-    import sys
-
-    from spark_data_engineering_spark.cacheutil import code_digest
-
-    src = f"{sf_dir}/documents.parquet"
-    stat = os.stat(src)
-    # derived-cache rule: the staged bytes come from in-module injection
-    # code, so the key must fold the deriving module's digest — an edit
-    # to the corruption rule must invalidate the stage (round-7 review)
-    digest = hashlib.md5(
-        f"quarantine:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(sys.modules[__name__])}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_fmt/quarantine/{digest}"
-    if not os.path.isdir(staged):
+    # the staged bytes come from the injection code below, and the key
+    # always covers this module, so an edit to the corruption rule
+    # invalidates the stage
+    def build(tmp: str) -> None:
         clean = load_table(spark, "documents", sf_dir).select("doc_id", "text")
         lines = clean.select(F.to_json(F.struct("doc_id", "text")).alias("value"))
         # inject: drop the closing brace on every doc_id % 13 == 3 line
@@ -223,7 +193,11 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("value"))
             .alias("value")
         )
-        corrupted.repartition(4).write.mode("overwrite").text(staged)
+        corrupted.repartition(4).write.text(tmp)
+
+    staged = cached(
+        "fmt/quarantine", "quarantine", sf_dir, build, tables=("documents",)
+    )
 
     parsed = (
         spark.read.schema("doc_id bigint, text string, _corrupt_record string")
@@ -244,8 +218,8 @@ def corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = parsed.filter(F.col("_corrupt_record").isNotNull()).select(
         "doc_id", F.col("_corrupt_record").alias("raw_line")
     )
-    qdir = f"{staged}-deadletter"
-    bad.write.mode("overwrite").parquet(qdir)
+    qdir = scratch_dir("deadletter") + "/data"
+    bad.write.parquet(qdir)
     n_quarantined = (
         spark.read.parquet(qdir).agg(F.count(F.lit(1)).alias("n")).select("n")
     )

@@ -9,18 +9,19 @@ maintenance instead of recompute)."""
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_data_engineering_spark.cacheutil import claim
+from spark_data_engineering_spark.cacheutil import cached, scratch_dir
 from spark_data_engineering_spark.functions import numeric as NR
+from spark_data_engineering_spark.pipeline import incremental as _inc_mod
+from spark_data_engineering_spark.pipeline import scd2_incremental as _scd2_mod
 from spark_data_engineering_spark.pipeline.incremental import IncrementalAggregate
 from spark_data_engineering_spark.registry import query
 from spark_data_engineering_spark.sources import load_table
+from spark_data_engineering_spark.sources import txn as _txn_mod
 from spark_data_engineering_spark.sources.txn import TxnTable
 
 
@@ -60,45 +61,28 @@ def incremental_daily_revenue_merged(spark: SparkSession, sf_dir: str) -> DataFr
     return _run_incremental(spark, sf_dir, strategy="merge")
 
 
-def _incr_digest(sf_dir: str, tag: str) -> str:
-    """Cache key for an incremental-lifecycle build: source data
-    mtime/size + the code digest of every module whose edit must
-    invalidate the cached lineage (the repo-wide derived-bytes rule).
-    The lifecycle (appends, delete, per-commit refreshes) runs ONCE per
-    key; later calls read the maintained state back — the same
-    steady-state accounting the cached writer-roundtrip/upsert/
-    expectations builds use, with the build cost in SCALE.md."""
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.pipeline import incremental as _inc_mod
-    from spark_data_engineering_spark.pipeline import (
-        scd2_incremental as _scd2_mod,
+def txn_cached(
+    tag: str,
+    sf_dir: str,
+    build,
+    *,
+    tables=("orders",),
+    modules=(),
+    namespace: str = "incremental",
+) -> str:
+    """``cacheutil.cached`` for a txn-table build: every one derives
+    its state through sources/txn.py, so that module is always part of
+    the key."""
+    return cached(
+        namespace, tag, sf_dir, build, tables=tables, modules=(_txn_mod, *modules)
     )
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    return hashlib.md5(
-        f"{tag}:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod, _inc_mod, _scd2_mod)}".encode()
-    ).hexdigest()[:16]
-
-
-def _publish(tmp_root: str, root: str) -> None:
-    try:
-        os.rename(tmp_root, root)
-    except OSError:
-        shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
 
 
 def _run_incremental(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
-    import uuid
+    """The lifecycle (appends, delete, per-commit refreshes) runs ONCE
+    per cache key; later calls read the maintained state back."""
 
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/{strategy}-{_incr_digest(sf_dir, strategy)}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         base = TxnTable(tmp_root, "orders_base")
         view = IncrementalAggregate(
             base,
@@ -113,7 +97,8 @@ def _run_incremental(spark: SparkSession, sf_dir: str, strategy: str) -> DataFra
         view.refresh(spark, strategy=strategy)
         base.delete_where(spark, F.col("o_orderkey") % 17 == 3)
         view.refresh(spark, strategy=strategy)
-        _publish(tmp_root, root)
+
+    root = txn_cached(strategy, sf_dir, build, modules=(_inc_mod,))
     view = IncrementalAggregate(
         TxnTable(root, "orders_base"),
         TxnTable(root, "daily_revenue"),
@@ -153,14 +138,6 @@ def incremental_daily_order_report(spark: SparkSession, sf_dir: str) -> DataFram
     survivors. This is the reference's full-reload ETL deliverable
     re-expressed as view maintenance — the 100 TB cost model changes
     from O(orders) per run to O(new orders)."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/{_incr_digest(sf_dir, 'report')}"
-
     customers = load_table(spark, "customer", sf_dir).filter(
         F.col("c_acctbal") > 0
     ).select(F.col("c_custkey").alias("o_custkey"))
@@ -174,8 +151,7 @@ def incremental_daily_order_report(spark: SparkSession, sf_dir: str) -> DataFram
             transform=lambda cdf: cdf.join(F.broadcast(customers), "o_custkey"),
         )
 
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         view = make_view(tmp_root)
         base = view.base
         orders = load_table(spark, "orders", sf_dir)
@@ -185,7 +161,11 @@ def incremental_daily_order_report(spark: SparkSession, sf_dir: str) -> DataFram
         view.refresh(spark, strategy="merge")
         base.delete_where(spark, F.col("o_orderkey") % 23 == 7)
         view.refresh(spark, strategy="merge")
-        _publish(tmp_root, root)
+
+    # every refresh folds through the customer join, so both tables key it
+    root = txn_cached(
+        "report", sf_dir, build, tables=("orders", "customer"), modules=(_inc_mod,)
+    )
     view = make_view(root)
 
     rev = F.col("revenue_dec").cast("double")
@@ -197,30 +177,25 @@ def incremental_daily_order_report(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def orders_ds_table(spark: SparkSession, sf_dir: str) -> TxnTable:
-    """Build (once, cached on source mtime+size) the two-commit orders
-    txn table consumed through the ``format("txn")`` connector — shared
-    by ``txn_datasource_revenue`` (batch read) and
+    """Build (once, cached) the two-commit orders txn table consumed
+    through the ``format("txn")`` connector — shared by
+    ``txn_datasource_revenue`` (batch read) and
     ``streaming_txn_source_revenue`` (stream read), so both gates see
     the identical commit log."""
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
 
     register_txn(spark)
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"ds:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_incremental/ds-{digest}"
-    table = TxnTable(root, "orders_ds")
-    if table.version() == 0:
+
+    def build(tmp_root: str) -> None:
+        table = TxnTable(tmp_root, "orders_ds")
         orders = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        # two commits on purpose (exercises multi-commit planning), but
-        # idempotent: a concurrent builder racing the version check
-        # cannot double the rows
-        table.append_idempotent(orders.filter(F.col("o_orderkey") % 2 == 0), "ds-build", 1)
-        table.append_idempotent(orders.filter(F.col("o_orderkey") % 2 == 1), "ds-build", 2)
-    return table
+        # two commits on purpose (exercises multi-commit planning)
+        table.append(orders.filter(F.col("o_orderkey") % 2 == 0))
+        table.append(orders.filter(F.col("o_orderkey") % 2 == 1))
+
+    return TxnTable(txn_cached("ds", sf_dir, build), "orders_ds")
 
 
 @query(
@@ -266,32 +241,26 @@ def txn_restore_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite (subset with zeroed prices) replaces them at v2, and
     ``restore(1)`` rolls the live set back as a new metadata-only commit
     — the head read must hash-match SQL over the ORIGINAL parquet,
-    proving the rollback restored every row and stat. Build steps are
-    exactly-once ((app, epoch) watermarks; the restore step keys on
-    state, so replays are no-ops) and the poison history stays
-    time-travelable. Restore edge cases (post-target DV refusal, count
+    proving the rollback restored every row and stat. The build runs
+    once per cache key and the poison history stays time-travelable.
+    Restore edge cases (post-target DV refusal, count
     re-establishment, checkpoint replay, vacuumed targets) are pinned in
     tests/test_txn_restore.py."""
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"restore:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_incremental/restore-{digest}"
-    table = TxnTable(root, "orders_restore")
-    app = "restore-build"
-    orders = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    if table.last_epoch(app) < 1:
-        table.append_idempotent(orders, app, 1)
-    if table.last_epoch(app) < 2:
+
+    def build(tmp_root: str) -> None:
+        table = TxnTable(tmp_root, "orders_restore")
+        orders = load_table(spark, "orders", sf_dir).select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
+        )
+        table.append(orders)
         poison = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
             "o_totalprice", F.lit(0.0)
         )
-        table.overwrite(poison, txn=(app, 2))
-    if set(table.live_files()) != set(table.live_files(1)):
+        table.overwrite(poison)
         table.restore(1)
-    df = table.read(spark)
+
+    root = txn_cached("restore", sf_dir, build)
+    df = TxnTable(root, "orders_restore").read(spark)
     return df.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -354,15 +323,8 @@ def incremental_scd2_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole dimension from scratch over the surviving rows. Both must
     hash-match exactly (decimal money, key-local builder)."""
     from spark_data_engineering_spark.pipeline.scd2_incremental import IncrementalSCD2
+    from spark_data_engineering_spark.queries import scd2 as _scd2_q
     from spark_data_engineering_spark.queries.scd2 import build_scd2_tiers
-
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/scd2-{_incr_digest(sf_dir, 'scd2')}"
 
     def make_view(r: str) -> IncrementalSCD2:
         return IncrementalSCD2(
@@ -373,8 +335,7 @@ def incremental_scd2_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
             base_key="o_custkey",
         )
 
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         view = make_view(tmp_root)
         base = view.base
         orders = load_table(spark, "orders", sf_dir).select(
@@ -386,7 +347,8 @@ def incremental_scd2_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         view.refresh(spark)
         base.delete_where(spark, F.col("o_orderkey") % 17 == 3)
         view.refresh(spark)
-        _publish(tmp_root, root)
+
+    root = txn_cached("scd2", sf_dir, build, modules=(_scd2_mod, _scd2_q))
     return make_view(root).read(spark).select(
         "custkey", "tier", "valid_from", "valid_to", "version"
     )
@@ -416,27 +378,19 @@ def zorder_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes both columns' boxes tight simultaneously — a single-column
     sort cannot); this query is the correctness half: skipping must
     never change an answer."""
-    stat = os.stat(f"{sf_dir}/lineitem.parquet")
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    digest = hashlib.md5(
-        f"zorder:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_incremental/zorder-{digest}"
-    table = TxnTable(root, "lineitem_z")
-    if table.version() == 0:
+    def build(tmp_root: str) -> None:
+        table = TxnTable(tmp_root, "lineitem_z")
         li = load_table(spark, "lineitem", sf_dir).select(
             "l_returnflag", "l_suppkey", "l_quantity", "l_extendedprice", "l_discount"
         )
-        # overwrite, not append: two concurrent builders racing the
-        # version()==0 check then converge (last writer wins) instead of
-        # doubling the cached table
-        table.overwrite(li)
+        table.append(li)
         table.compact(
             spark, target_file_bytes=256 * 1024, zorder_by=["l_suppkey", "l_quantity"]
         )
+
+    root = txn_cached("zorder", sf_dir, build, tables=("lineitem",))
+    table = TxnTable(root, "lineitem_z")
     files = table.prune_files({"l_suppkey": (20, 60), "l_quantity": (10.0, 20.0)})
     paths = [os.path.join(table.data_dir, f) for f in files]
     df = (
@@ -459,27 +413,17 @@ def zorder_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def orders_partitioned_table(spark: SparkSession, sf_dir: str) -> TxnTable:
-    """Build (once, cached on source mtime+size+code digest) the orders
-    txn table partitioned by (o_orderstatus, o_year) — shared by
+    """Build (once, cached) the orders txn table partitioned by
+    (o_orderstatus, o_year) — shared by
     ``txn_partition_pruned_revenue`` (library-API pruning with the
     pinned files-read assertion) and ``txn_pushdown_revenue`` (the SAME
     pruning reached through Catalyst filter pushdown on
     ``format("txn")``), so both gates plan over the identical log."""
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    digest = hashlib.md5(
-        f"partition:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    root = f"/tmp/spark_de_incremental/partition-{digest}"
-    claim(root)  # keep a concurrent sweep_stale off a live entry
-    table = TxnTable(
-        root, "orders_part", partition_cols=("o_orderstatus", "o_year")
-    )
-    if table.version() == 0:
+    def table(root: str) -> TxnTable:
+        return TxnTable(root, "orders_part", partition_cols=("o_orderstatus", "o_year"))
+
+    def build(tmp_root: str) -> None:
         o = (
             load_table(spark, "orders", sf_dir)
             .select(
@@ -490,10 +434,10 @@ def orders_partitioned_table(spark: SparkSession, sf_dir: str) -> TxnTable:
             )
             .withColumn("o_year", F.year("o_orderdate"))
         )
-        # one task per partition combo -> one file per combo; overwrite
-        # (not append) so racing builders converge (zorder pattern)
-        table.overwrite(o.repartition("o_orderstatus", "o_year"))
-    return table
+        # one task per partition combo -> one file per combo
+        table(tmp_root).append(o.repartition("o_orderstatus", "o_year"))
+
+    return table(txn_cached("partition", sf_dir, build))
 
 
 @query(
@@ -596,37 +540,30 @@ def txn_pushdown_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def orders_generated_table(spark: SparkSession, sf_dir: str) -> TxnTable:
-    """Build (once, cached on source mtime+size+code digest) an orders
-    txn table whose partition column is GENERATED: the writer supplies
+    """Build (once, cached) an orders txn table whose partition column
+    is GENERATED: the writer supplies
     only the base columns and the table derives
     ``o_year = year(o_orderdate)`` itself (Delta's GENERATED ALWAYS AS
     applied to its canonical use — partition-by-derived-date without
     every writer having to remember the derivation)."""
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    digest = hashlib.md5(
-        f"gencols:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    root = f"/tmp/spark_de_incremental/gencols-{digest}"
-    table = TxnTable(
-        root,
-        "orders_gen",
-        partition_cols=("o_year",),
-        generated_cols={"o_year": "year(o_orderdate)"},
-    )
-    if table.version() == 0:
+    def table(root: str) -> TxnTable:
+        return TxnTable(
+            root,
+            "orders_gen",
+            partition_cols=("o_year",),
+            generated_cols={"o_year": "year(o_orderdate)"},
+        )
+
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderstatus", "o_orderpriority", "o_totalprice", "o_orderdate"
         )
         # NO o_year in the frame: the table generates it. One task per
-        # year -> one file per partition; overwrite (not append) so
-        # racing builders converge (zorder pattern)
-        table.overwrite(o.repartition(F.year("o_orderdate")))
-    return table
+        # year -> one file per partition
+        table(tmp_root).append(o.repartition(F.year("o_orderdate")))
+
+    return table(txn_cached("gencols", sf_dir, build))
 
 
 @query(
@@ -712,23 +649,7 @@ def txn_replace_where_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     a leaked row, an over-wide remove, or a double-applied correction
     all break the hash. At 100 TB: re-running a day's load rewrites
     the day's partition, never the table."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"rw:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/rw-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(
             tmp_root, "orders_rw", partition_cols=("o_orderstatus", "o_year")
         )
@@ -753,10 +674,8 @@ def txn_replace_where_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         if not part or not (before - part) <= set(t.live_files()):
             raise AssertionError("replace_where touched other partitions")
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("rw", sf_dir, build)
     table = TxnTable(root, "orders_rw")
     return (
         table.read(spark)
@@ -799,23 +718,7 @@ def txn_update_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated, or a lost non-matching row in a rewritten file all break
     the hash. At 100 TB the rewrite cost tracks the files containing
     matches, never the table."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"upd:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/upd-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_upd")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -829,10 +732,8 @@ def txn_update_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if not t._read_commit(v).get("cdf_add"):
             raise AssertionError("update_where(cdf=True) recorded no images")
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("upd", sf_dir, build)
     table = TxnTable(root, "orders_upd")
     return (
         table.read(spark)
@@ -869,16 +770,9 @@ def txn_snapshot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the plain SQL join over the ORIGINAL tables; fresh
     store per call (cheap: one write of each table), no cache to
     race."""
-    import tempfile
-
     from spark_data_engineering_spark.sources.txn import TxnStore
 
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    os.makedirs("/tmp/spark_de_txnsnap", exist_ok=True)
-    sweep_stale("/tmp/spark_de_txnsnap")
-    root = tempfile.mkdtemp(prefix="snap-", dir="/tmp/spark_de_txnsnap")
-    store = TxnStore(root)
+    store = TxnStore(scratch_dir("txnsnap", prefix="snap-"))
     cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
     orders = load_table(spark, "orders", sf_dir).select("o_custkey", "o_totalprice")
     store._table("cust").append(cust)
@@ -923,14 +817,7 @@ def dv_delete_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/txn.py:_read_files_meta); compaction materializing the
     same DVs to identical results is pinned in tests/test_txn_dv.py.
     Fresh table per call — the build is one orders write."""
-    import tempfile
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-
-    os.makedirs("/tmp/spark_de_dv", exist_ok=True)
-    sweep_stale("/tmp/spark_de_dv")
-    root = tempfile.mkdtemp(prefix="dv-", dir="/tmp/spark_de_dv")
-    t = TxnTable(root, "orders")
+    t = TxnTable(scratch_dir("dv", prefix="dv-"), "orders")
     t.append(
         load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
@@ -968,23 +855,19 @@ def bloom_index_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom prunes to ~1 file per lookup (skip ratio pinned in
     tests/test_txn_bloom_index.py; no false negatives by
     construction, so results must hash-match the plain IN-list SQL).
-    Cache-keyed build, race-safe overwrite."""
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.sources import txn as _txn_mod
+    Cache-keyed build."""
 
-    digest = hashlib.md5(
-        f"bloomidx:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_incremental/bloomidx-{digest}"
-    table = TxnTable(root, "orders_b", bloom_cols=("o_orderkey",))
-    if table.version() == 0:
-        table.overwrite(
+    def open_table(root: str) -> TxnTable:
+        return TxnTable(root, "orders_b", bloom_cols=("o_orderkey",))
+
+    def build(tmp_root: str) -> None:
+        open_table(tmp_root).append(
             load_table(spark, "orders", sf_dir)
             .select("o_orderkey", "o_orderpriority", "o_totalprice")
             .repartition(8)
         )
+
+    table = open_table(txn_cached("bloomidx", sf_dir, build))
     keys = [
         int(r[0])
         for r in load_table(spark, "orders", sf_dir)
@@ -1046,20 +929,9 @@ def txn_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the report never touches data — at 100 TB it reads a few KB
     of commit JSON, which is the entire point of stats-based
     maintenance planning."""
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    stat = os.stat(f"{sf_dir}/documents.parquet")
-    digest = hashlib.md5(
-        f"maint:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_maint", exist_ok=True)
-    sweep_stale("/tmp/spark_de_maint")
-    root = f"/tmp/spark_de_maint/{digest}"
-    t = TxnTable(root, "docs")
-    done = os.path.join(t.table_dir, "_maint_done")
-    if not os.path.exists(done):
+    def build(tmp_root: str) -> None:
+        t = TxnTable(tmp_root, "docs")
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
         t.append_idempotent(docs.repartition(4, "doc_id"), "maint", 1)
         small = (
@@ -1081,8 +953,9 @@ def txn_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "txn_maintenance_report build invariant broken: expected "
                 f"4 hash-partition files + 1 small-append file, got {n_built}"
             )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    root = txn_cached("maint", sf_dir, build, tables=("documents",), namespace="maint")
+    t = TxnTable(root, "docs")
     files = t.live_files()
     _, dv_counts = t.dv_state()
     physical = t.count_rows() + sum(dv_counts.values())
@@ -1147,27 +1020,7 @@ def txn_branch_merge_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: branch creation writes a few KB of log regardless of table
     size; the merge is one metadata commit per branch commit; the only
     data ever written is the branch's own corrections."""
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"branch:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_branch", exist_ok=True)
-    sweep_stale("/tmp/spark_de_branch")
-    root = f"/tmp/spark_de_branch/{digest}"
-    # crash/race-safe cached build: construct under a private tmp root,
-    # then atomically rename into place — a crash mid-build leaves no
-    # half-built table under the digest key, and a concurrent builder
-    # loses the rename and discards its copy (round-7 review finding;
-    # the done-marker-after-append pattern re-entered half-built state)
-    if not claim(root):
-        import shutil as _sh
-        import uuid as _uuid
-
-        tmp_root = f"{root}.build-{_uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_br")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1189,10 +1042,8 @@ def txn_branch_merge_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"branch leaked into main pre-merge: {t.count_rows()} != {n_all}"
             )
         t.merge_branch(b)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("branch", sf_dir, build, namespace="branch")
     t = TxnTable(root, "orders_br")
     return t.read(spark).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -1251,23 +1102,9 @@ def txn_branch_rebase_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rebase is pure metadata (the branch's staged files and DV
     sidecars are immutable and re-referenced); the only data written is
     the branch's own corrections."""
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import ConcurrentWriteError
 
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"rebase:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_branch", exist_ok=True)
-    sweep_stale("/tmp/spark_de_branch")
-    root = f"/tmp/spark_de_branch/rb-{digest}"
-    if not claim(root):
-        import shutil as _sh
-        import uuid as _uuid
-
-        tmp_root = f"{root}.build-{_uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_rb")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1295,10 +1132,8 @@ def txn_branch_rebase_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
         rb = t.rebase_branch(b)
         t.merge_branch(rb)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("rebase", sf_dir, build, namespace="branch")
     t = TxnTable(root, "orders_rb")
     return t.read(spark).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -1334,27 +1169,11 @@ def txn_writer_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the write is embarrassingly parallel (one file per task, no
     shuffle beyond the caller's partitioning); the commit is one JSON
     append regardless of table size."""
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources import txn_datasource as _ds_mod
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
 
     register_txn(spark)
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"writer:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod, _ds_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_branch", exist_ok=True)
-    sweep_stale("/tmp/spark_de_branch")
-    root = f"/tmp/spark_de_branch/w-{digest}"
-    # crash/race-safe cached build (same tmp-root + atomic rename as
-    # txn_branch_merge_revenue; round-7 review finding)
-    if not claim(root):
-        import shutil as _sh
-        import uuid as _uuid
-
-        tmp_root = f"{root}.build-{_uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_w")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1369,10 +1188,8 @@ def txn_writer_roundtrip_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         if t.version() != 2:  # one atomic commit per save — build invariant
             raise AssertionError(f"expected 2 commits, log has {t.version()}")
         t.delete_where_dv(spark, F.col("o_orderkey") % 11 == 4)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)
+
+    root = txn_cached("writer", sf_dir, build, modules=(_ds_mod,), namespace="branch")
     t = TxnTable(root, "orders_w")
     return (
         spark.read.format("txn")
@@ -1415,23 +1232,7 @@ def txn_dv_maintenance_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: prune reads only the KB-scale sidecars (never data), commits
     once via compare-and-swap; vacuum's sidecar GC is a directory
     listing against the retained-state union."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"dvmaint:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_branch", exist_ok=True)
-    sweep_stale("/tmp/spark_de_branch")
-    root = f"/tmp/spark_de_branch/dvm-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_dvm")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1443,10 +1244,8 @@ def txn_dv_maintenance_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         if pruned is None:
             raise AssertionError("dv-prune found nothing to drop post-compact")
         t.vacuum(keep_versions=1, min_age_s=0.0)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("dvmaint", sf_dir, build, namespace="branch")
     t = TxnTable(root, "orders_dvm")
     n_sidecars = len(t.dv_state()[0])
     return t.read(spark).groupBy("o_orderstatus").agg(
@@ -1486,22 +1285,9 @@ def txn_constraint_gate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Enforcement is ONE folded aggregate job over the staged bytes per
     write (the WAP audit discipline) — at 100 TB the cost tracks the
     batch, never the table."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
     from spark_data_engineering_spark.checks import CheckError
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"cons:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/cons-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_cons")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1526,10 +1312,8 @@ def txn_constraint_gate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if t.constraints() != {"price_pos": "o_totalprice > 0"}:
             raise AssertionError("constraint map desynced")
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("cons", sf_dir, build)
     table = TxnTable(root, "orders_cons")
     return (
         table.read(spark)
@@ -1568,24 +1352,7 @@ def txn_identity_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution-dependent assignment hashable. A duplicated id breaks
     n_distinct_ids AND id_sum; a skipped id breaks max AND id_sum; a
     second append restarting at 1 breaks all three."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"ident:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/ident-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(
             tmp_root, "orders_id", identity_cols={"rid": {"start": 1, "step": 1}}
         )
@@ -1594,10 +1361,8 @@ def txn_identity_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(o.filter(F.col("o_orderkey") % 2 == 0).repartition(3))
         t.append(o.filter(F.col("o_orderkey") % 2 != 0).repartition(3))
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("ident", sf_dir, build)
     t = TxnTable(root, "orders_id")
     return t.read(spark).agg(
         F.count("*").alias("n_rows"),
@@ -1636,21 +1401,7 @@ def txn_detail_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte size). Parity: Delta DESCRIBE DETAIL. The count_rows
     agreement contract (legacy stats fallback) is pinned in
     tests/test_txn_autocompact.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"detail:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/detail-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_detail", partition_cols=("o_orderstatus",))
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1658,10 +1409,8 @@ def txn_detail_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(o.repartition(4, "o_orderkey"))                  # v1
         t.delete_where_dv(spark, F.col("o_orderkey") % 13 == 0)   # v2
         t.add_constraint(spark, "price_nonneg", "o_totalprice >= 0")  # v3
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("detail", sf_dir, build)
     t = TxnTable(root, "orders_detail")
     d = t.detail()
     row = (
@@ -1701,21 +1450,7 @@ def txn_properties_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata commits changed no data (the DDL actions are net-zero in
     every dispatcher). Branch/merge/rebase/stream triage is pinned in
     tests/test_txn_properties.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"props:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/props-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_props")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_totalprice"
@@ -1724,10 +1459,8 @@ def txn_properties_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.set_properties({"owner": "etl", "tier": "gold"})  # v2
         t.set_properties({"tier": "silver"})                # v3 (merge)
         t.unset_properties(["owner"])                       # v4
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("props", sf_dir, build)
     t = TxnTable(root, "orders_props")
     props = t.properties()
     assert props == {"tier": "silver"}, props
@@ -1766,28 +1499,12 @@ def txn_convert_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     to gain a transaction log is not an option. Stream/CDF/append/DV
     behavior of a converted table is pinned in
     tests/test_txn_convert.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"convert:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/convert-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         TxnTable.convert_from_parquet(
             spark, tmp_root, "orders_conv", f"{sf_dir}/orders.parquet"
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("convert", sf_dir, build)
     t = TxnTable(root, "orders_conv")
     return t.read(spark).groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -1821,21 +1538,7 @@ def txn_add_column_default_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     aggregate must hash-match SQL reconstructing the same channel with
     a CASE over the original parquet — pre-add NULLs, write-time
     defaults, and explicit values all agree row-for-row."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"addcol:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/addcol-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_ac")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_totalprice"
@@ -1847,10 +1550,8 @@ def txn_add_column_default_revenue(spark: SparkSession, sf_dir: str) -> DataFram
         t.append(                                            # v4: explicit
             o.filter(m == 0).withColumn("channel", F.lit("web"))
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("addcol", sf_dir, build)
     t = TxnTable(root, "orders_ac")
     return t.read(spark).groupBy(
         F.coalesce(F.col("channel"), F.lit("none")).alias("channel")
@@ -1889,21 +1590,7 @@ def txn_set_drop_default_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same channel with a CASE over the original parquet —
     set-then-write, re-set-then-write, and drop-then-write all agree
     row-for-row with the declared semantics."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"setdropdflt:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/setdropdflt-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_sd")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_totalprice"
@@ -1919,10 +1606,8 @@ def txn_set_drop_default_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(o.filter(m.between(6, 7)))                  # v6: 'kiosk'
         t.drop_column_default(spark, "channel")              # v7: DDL
         t.append(o.filter(m >= 8))                           # v8: NULL again
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("setdropdflt", sf_dir, build)
     t = TxnTable(root, "orders_sd")
     return t.read(spark).groupBy(
         F.coalesce(F.col("channel"), F.lit("none")).alias("channel")
@@ -1956,29 +1641,13 @@ def txn_analyze_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     advice). Integer arithmetic is the point: bucket boundaries
     cannot drift by a half-ulp between engines, so the CBO input in
     the log is bit-trustworthy, not approximately right."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"analyzehist:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/analyzehist-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable.convert_from_parquet(
             spark, tmp_root, "orders_ah", f"{sf_dir}/orders.parquet"
         )
         t.analyze(spark, columns=["o_custkey"], histogram_bins=8)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("analyzehist", sf_dir, build)
     t = TxnTable(root, "orders_ah")
     cs = t.column_stats()  # metadata-only read-back
     h = cs["columns"]["o_custkey"]["histogram"]
@@ -2011,21 +1680,7 @@ def txn_partition_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     tests/test_txn_partition_evolution.py). The grouped aggregate over
     the MIXED-layout table must hash-match SQL over the original
     parquet — both cohorts, both schemes, one answer."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"partevo:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/partevo-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(
             tmp_root, "orders_pe", partition_cols=("o_orderstatus",)
         )
@@ -2035,10 +1690,8 @@ def txn_partition_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         t.append(o.filter(F.col("o_orderkey") % 2 == 1))
         t.set_partitioning(spark, ("o_orderpriority",))
         t.append(o.filter(F.col("o_orderkey") % 2 == 0))
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("partevo", sf_dir, build)
     t = TxnTable(root, "orders_pe")
     return t.read(spark).groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
@@ -2075,21 +1728,7 @@ def txn_merge_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original parquet — update arm, evolution arm, and NULL history
     agree row-for-row. Doubling a double is exact in binary, so the
     DECIMAL(18,2) revenue hash cannot drift."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"mergeevo:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/mergeevo-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_me")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_totalprice"
@@ -2101,10 +1740,8 @@ def txn_merge_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("channel", F.lit("web"))
         )
         t.merge(spark, cdc, on=["o_orderkey"], schema_evolution=True)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("mergeevo", sf_dir, build)
     t = TxnTable(root, "orders_me")
     return t.read(spark).groupBy(
         F.coalesce(F.col("channel"), F.lit("none")).alias("channel")
@@ -2146,21 +1783,7 @@ def txn_scoped_compact_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — migration, purity gate, and replace all agree.
     Doubling a double is exact in binary, so the DECIMAL(18,2)
     revenue hash cannot drift."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"scopedcompact:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/scopedcompact-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(
             tmp_root, "orders_sc", partition_cols=("o_orderstatus",)
         )
@@ -2189,10 +1812,8 @@ def txn_scoped_compact_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             replace_where={"o_orderpriority": "1-URGENT"},
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("scopedcompact", sf_dir, build)
     t = TxnTable(root, "orders_sc")
     return t.read(spark).groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
@@ -2234,21 +1855,7 @@ def txn_widen_column_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructing the offset with a CASE over the original parquet —
     legacy pages, widened pages, and the aggregate agree exactly
     (integer sums: no float drift possible)."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"widencol:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/widencol-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_wc")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey",
@@ -2263,10 +1870,8 @@ def txn_widen_column_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("o_custkey").cast("bigint") + F.lit(2**40),
             )
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("widencol", sf_dir, build)
     t = TxnTable(root, "orders_wc")
     return (
         t.read(spark)
@@ -2321,21 +1926,7 @@ def txn_widen_nested_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     element sums (via F.aggregate, JVM-side), and revenue must
     hash-match SQL reconstructing the offset over the original parquet
     — integer sums, no float drift possible."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"widennested:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/widennested-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_wn")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey",
@@ -2367,10 +1958,8 @@ def txn_widen_nested_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_totalprice",
             )
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("widennested", sf_dir, build)
     t = TxnTable(root, "orders_wn")
     return (
         t.read(spark)
@@ -2421,21 +2010,7 @@ def txn_tag_pinned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     routine retention). The aggregate over ``read(tag="release")``
     must hash-match SQL over the odd-key cohort of the original
     parquet."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"tagpin:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/tagpin-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_tag")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -2445,10 +2020,8 @@ def txn_tag_pinned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(o.filter(F.col("o_orderkey") % 2 == 0))
         t.delete_where(spark, F.col("o_orderkey") % 5 == 0)
         t.vacuum(keep_versions=1)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("tagpin", sf_dir, build)
     t = TxnTable(root, "orders_tag")
     return (
         t.read(spark, tag="release")
@@ -2492,29 +2065,13 @@ def txn_analyze_equiheight(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic on any engine. The engine side never builds the
     per-row global sort — ranks derive from per-distinct-value counts
     (one NDV-sized shuffle) with a bins-bounded interval explode."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"analyzeeh:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/analyzeeh-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable.convert_from_parquet(
             spark, tmp_root, "orders_eh", f"{sf_dir}/orders.parquet"
         )
         t.analyze(spark, columns=["o_custkey"], equi_height_bins=8)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("analyzeeh", sf_dir, build)
     t = TxnTable(root, "orders_eh")
     cs = t.column_stats()  # metadata-only read-back
     eh = cs["columns"]["o_custkey"]["histogram_eh"]
@@ -2551,30 +2108,14 @@ def txn_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, zero data pages) — must hash-match SQL COUNTs over the
     surviving rows. The operator view that decides scoped OPTIMIZE /
     retention targets at 100 TB without listing a single object."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"showparts:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/showparts-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(
             tmp_root, "orders_sp", partition_cols=("o_orderstatus",)
         )
         t.append(load_table(spark, "orders", sf_dir))
         t.delete_where_dv(spark, F.col("o_orderkey") % 7 == 0)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("showparts", sf_dir, build)
     t = TxnTable(root, "orders_sp")
     parts = t.show_partitions()  # metadata-only: no Spark job
     rows = [
@@ -2624,30 +2165,14 @@ def txn_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes stats trustworthy for a cost-based planner: the log carries
     exactly what a full recompute would say, pinned per column
     (null count, NDV, min, max as strings)."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"analyze:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/analyze-{digest}"
     cols = ("o_custkey", "o_orderstatus", "o_orderpriority")
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable.convert_from_parquet(
             spark, tmp_root, "orders_an", f"{sf_dir}/orders.parquet"
         )
         t.analyze(spark, columns=cols)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("analyze", sf_dir, build)
     t = TxnTable(root, "orders_an")
     cs = t.column_stats()  # metadata-only read-back
     assert cs and set(cs["columns"]) == set(cols), cs
@@ -2694,30 +2219,14 @@ def txn_hive_convert_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-pure for the probed status. Lifecycle (mixed appends, merge,
     compact, clone, time travel, fsck) is pinned in
     tests/test_txn_hive_partitioned.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"hiveconvert:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/hiveconvert-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         corpus = os.path.join(tmp_root, "corpus")
         load_table(spark, "orders", sf_dir).write.partitionBy(
             "o_orderstatus"
         ).parquet(corpus)
         TxnTable.convert_from_parquet(spark, tmp_root, "orders_hive", corpus)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("hiveconvert", sf_dir, build)
     t = TxnTable(root, "orders_hive")
     assert t.partition_cols() == ("o_orderstatus",) and t.hive_origin()
     # pruning exactness, metadata-only: the probe selects a strict,
@@ -2759,21 +2268,7 @@ def txn_clone_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     never break the other (each owns its links). Lifecycle details
     (metadata carry-over, CDF, vacuum safety, COPY ledger inheritance)
     are pinned in tests/test_txn_clone_copy.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"clone:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/clone-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         src = TxnTable(os.path.join(tmp_root, "src"), "orders_src")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2783,10 +2278,8 @@ def txn_clone_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         src.clone(os.path.join(tmp_root, "dst"), "orders_clone")
         # mutate the SOURCE after the clone: the clone must not move
         src.delete_where_dv(spark, F.col("o_orderstatus") == "O")
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("clone", sf_dir, build)
     c = TxnTable(os.path.join(root, "dst"), "orders_clone")
     assert c._read_commit(1)["action"] == "clone"
     return c.read(spark).groupBy("o_orderstatus").agg(
@@ -2818,21 +2311,7 @@ def txn_copy_into_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup), constraint enforcement on staged bytes, and ledger
     inheritance through clone/branch-merge are pinned in
     tests/test_txn_clone_copy.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"copyinto:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/copyinto-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         land = os.path.join(tmp_root, "landing")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2850,10 +2329,8 @@ def txn_copy_into_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert r2["files_loaded"] >= 1 and r2["files_skipped"] >= 1, r2
         r3 = t.copy_into(spark, land)  # third tick: nothing new
         assert r3["files_loaded"] == 0, r3
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("copyinto", sf_dir, build)
     t = TxnTable(os.path.join(root, "tbl"), "orders_copy")
     return t.read(spark).groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -2892,21 +2369,7 @@ def txn_schema_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_txn_rename_drop.py and tests/test_schema_evolution.py. At 100 TB this is THE schema-change
     path: a rename or drop that rewrote the corpus would be a
     multi-day job; here all three DDLs are one CAS commit each."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"schemaevo:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/schemaevo-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -2923,10 +2386,8 @@ def txn_schema_evolution_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.rename_column(spark, "o_totalprice", "price")       # v3: metadata-only
         t.drop_column(spark, "scratch")                       # v4: tombstone
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("schemaevo", sf_dir, build)
     t = TxnTable(root, "orders_evo")
     df = t.read(spark)
     assert set(df.columns) == {"o_orderkey", "price", "o_orderstatus"}, (
@@ -2955,33 +2416,25 @@ def _orders_hidden_partition_table(spark: SparkSession, sf_dir: str) -> TxnTable
     from two existing primitives: a generated column computes the
     transform at write time (writers never supply it), and hive-style
     partition_cols records it per file for exact metadata pruning."""
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    from spark_data_engineering_spark.cacheutil import claim, code_digest
-    from spark_data_engineering_spark.sources import txn as _txn_mod
 
-    digest = hashlib.md5(
-        f"hiddenpart:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    root = f"/tmp/spark_de_incremental/hiddenpart-{digest}"
-    claim(root)  # keep a concurrent sweep_stale off a live entry
-    table = TxnTable(
-        root,
-        "orders_hidden",
-        partition_cols=("o_month",),
-        generated_cols={"o_month": "date_format(o_orderdate, 'yyyy-MM')"},
-    )
-    if table.version() == 0:
+    def table(root: str) -> TxnTable:
+        return TxnTable(
+            root,
+            "orders_hidden",
+            partition_cols=("o_month",),
+            generated_cols={"o_month": "date_format(o_orderdate, 'yyyy-MM')"},
+        )
+
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderpriority", "o_totalprice", "o_orderdate"
         )
-        # co-locate each month in one task -> one value-pure file per
-        # month; overwrite so racing builders converge
-        table.overwrite(
+        # co-locate each month in one task -> one value-pure file per month
+        table(tmp_root).append(
             o.repartition(F.expr("date_format(o_orderdate, 'yyyy-MM')"))
         )
-    return table
+
+    return table(txn_cached("hiddenpart", sf_dir, build))
 
 
 @query(
@@ -3065,21 +2518,7 @@ def txn_fsck_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-place file replacement) is pinned in tests/test_txn_fsck.py.
     At 100 TB fsck is the trust gate after any incident: metadata-only
     shallow tier, footer-bounded deep tier, both parallelizable."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import claim, code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"fsck:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/fsck-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_fsck", partition_cols=("o_orderstatus",))
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3087,10 +2526,8 @@ def txn_fsck_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(o.repartition(4, "o_orderkey"))                  # v1
         t.delete_where_dv(spark, F.col("o_orderkey") % 11 == 0)   # v2 (DV)
         t.compact(spark, where={"o_orderstatus": "F"})            # v3 scoped
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("fsck", sf_dir, build)
     t = TxnTable(root, "orders_fsck")
     rep = t.fsck(deep=True)
     assert rep["deep"] and rep["files_checked"] > 0, rep
@@ -3135,21 +2572,7 @@ def txn_reorg_purge_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs ~1% of the table in rewrite bytes, where full OPTIMIZE costs
     the corpus. Rename/drop physical purging and partitioned
     value-purity are pinned in tests/test_txn_reorg.py."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import claim, code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"reorg:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"{'/tmp/spark_de_incremental'}/reorg-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_reorg")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3161,10 +2584,8 @@ def txn_reorg_purge_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") < 5000),
         )                                                          # v2
         t.delete_where(spark, (F.col("o_orderkey") % 7 == 0))      # v3 (rest, CoW)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("reorg", sf_dir, build)
     t = TxnTable(root, "orders_reorg")
     before = set(t.live_files())
     _, deleted = t.dv_state()
@@ -3209,31 +2630,15 @@ def txn_manifest_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_txn_manifest.py. At 100 TB this is zero-copy interop:
     downstream engines consume pinned snapshots, the lakehouse stays
     the single source of truth."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import claim, code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"manifest:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/manifest-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_manifest")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
         t.append(o.repartition(4))                              # v1
         t.delete_where(spark, F.col("o_orderkey") % 5 == 0)     # v2 (CoW)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("manifest", sf_dir, build)
     t = TxnTable(root, "orders_manifest")
     # generated at the published location (absolute paths pin to the
     # final table dir, not the build scratch); metadata-only, idempotent
@@ -3282,21 +2687,7 @@ def txn_merge_sync_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full-sync / SCD close-out pattern without a full-table rewrite.
     Model-search coverage: the merge_sync op in tests/test_txn_model.py
     interleaves syncs with every other lifecycle op."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import claim, code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"mergesync:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/mergesync-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_sync")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3313,10 +2704,8 @@ def txn_merge_sync_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_not_matched=None,
             when_not_matched_by_source="delete",
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("mergesync", sf_dir, build)
     t = TxnTable(root, "orders_sync")
     return t.read(spark).groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
@@ -3347,21 +2736,7 @@ def txn_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-decreasing — the audit-trail surface an operator reads to
     answer "what touched this table, when, and how much data moved".
     Metadata-only end-to-end: the query never opens a data file."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import claim, code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
-
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"history:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/history-{digest}"
-    if not claim(root):
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_hist")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_totalprice"
@@ -3370,10 +2745,8 @@ def txn_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.delete_where_dv(spark, F.col("o_orderkey") % 10 == 0)   # v2
         t.set_properties({"tier": "audit"})                       # v3
         t.compact(spark, target_file_bytes=1 << 34)               # v4
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            shutil.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("history", sf_dir, build)
     t = TxnTable(root, "orders_hist")
     hist = t.history()
     ts = [c.get("ts") for c in hist]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from spark_data_engineering_spark.cacheutil import cached
 from spark_data_engineering_spark.functions import numeric as NR
 from spark_data_engineering_spark.registry import query
 from spark_data_engineering_spark.sources import load_table
@@ -141,26 +142,24 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _built_index(spark: SparkSession, sf_dir: str):
-    """The digest-keyed shared index build: ONE recipe for every
-    consumer (queries + tests), so the root can never diverge between
-    them. Build is a single atomic overwrite; concurrent builders
-    converge (last writer wins)."""
-    import hashlib
-    import os as _os
-
-    from spark_data_engineering_spark.cacheutil import code_digest
+    """The cached shared index build: ONE path for every consumer
+    (queries + tests), so the root can never diverge between them."""
     from spark_data_engineering_spark.operators import text_index as _ti_mod
     from spark_data_engineering_spark.operators.text_index import TextIndex
 
-    stat = _os.stat(f"{sf_dir}/documents.parquet")
-    digest = hashlib.md5(
-        f"textindex:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_ti_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_textindex/{digest}"
-    if TextIndex(root).table.version() == 0:
-        TextIndex.build(load_table(spark, "documents", sf_dir), root)
-    return TextIndex(root)
+    def build(tmp: str) -> None:
+        TextIndex.build(load_table(spark, "documents", sf_dir), tmp)
+
+    return TextIndex(
+        cached(
+            "textindex",
+            "textindex",
+            sf_dir,
+            build,
+            tables=("documents",),
+            modules=(_ti_mod,),
+        )
+    )
 
 
 @query("text_index_search", oracle=_bm25_oracle())

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_data_engineering_spark.cacheutil import build_once, cache_path
 from spark_data_engineering_spark.operators import similarity as S
 from spark_data_engineering_spark.functions import numeric as NR
 from spark_data_engineering_spark.registry import query
@@ -30,6 +31,33 @@ _BF_TOP10_ORACLE = """
     WHERE q.vec_id < 5 AND c.vec_id != q.vec_id
     QUALIFY rank <= 10
     """
+
+
+def _ann_index_path(tag: str, sf_dir: str) -> str:
+    """Key path of a persisted ANN index. Derived-state cache: the key
+    covers the training/index code as well as the data, so an edit to
+    centroid training or cell assignment rebuilds the index instead of
+    silently reusing one trained by old code. Every index is built by
+    this module."""
+    from spark_data_engineering_spark.operators import ann_index as _ai_mod
+
+    return cache_path(
+        "ann_index",
+        tag,
+        sf_dir,
+        _ann_index_path,
+        tables=("embeddings",),
+        modules=(_ai_mod, S),
+    )
+
+
+def cached_index_paths(sf_dir: str) -> dict[str, str]:
+    """Current key paths of the persisted indexes, by the query that
+    builds them on first use."""
+    return {
+        "ann_recall_report": _ann_index_path("ivf32", sf_dir),
+        "ann_index_incremental_search": _ann_index_path("ivf_inc", sf_dir),
+    }
 
 
 @query("knn_bruteforce", oracle=_BF_TOP10_ORACLE)
@@ -239,33 +267,17 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 0.14 is the honest number for near-uniform synthetic vectors —
     recorded here so no production config ships without recall evidence.
     """
-    import hashlib
-    import os
-
-    from spark_data_engineering_spark.operators.ann_index import IVFIndex
+    from spark_data_engineering_spark.operators.ann_index import IVFIndex, IVFPQIndex
 
     emb = load_table(spark, "embeddings", sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 5)
-    stat = os.stat(f"{sf_dir}/embeddings.parquet")
-    # derived-state cache: key on the training/index code as well as the
-    # data, so an edit to centroid training or cell assignment rebuilds
-    # the index instead of silently reusing one trained by old code
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.operators import ann_index as _ai_mod
-    from spark_data_engineering_spark.operators import similarity as _sim_mod
 
-    digest = hashlib.md5(
-        f"ivf32:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_ai_mod, _sim_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_ann_index/{digest}"
-    if not os.path.exists(os.path.join(root, "ann_ivf", "ivf_meta.json")):
-        IVFIndex.build(spark, emb, root, n_centroids=32)
+    def build(tmp: str) -> None:
+        IVFIndex.build(spark, emb, tmp, n_centroids=32)
+        IVFPQIndex.build(spark, emb, tmp, n_centroids=32, m=16, n_codes=32)
+
+    root = build_once(cached_index_paths(sf_dir)["ann_recall_report"], build)
     idx = IVFIndex(root)
-    from spark_data_engineering_spark.operators.ann_index import IVFPQIndex
-
-    if not os.path.exists(os.path.join(root, "ann_ivfpq", "ivfpq_meta.json")):
-        IVFPQIndex.build(spark, emb, root, n_centroids=32, m=16, n_codes=32)
     pq_idx = IVFPQIndex(root)
     # r14 optimization (guide §2.6 — overlap independent jobs, §2.4 —
     # share invariant work): building each method branch fires several
@@ -386,19 +398,13 @@ def ann_index_search_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the brute-force oracle. Exercises build, the atomic
     sidecar, the pushed cell-IN scan filter, and rescoring end-to-end;
     production searches are the same code with n_probe < n_cells."""
-    import hashlib
-    import os
-
     from spark_data_engineering_spark.operators.ann_index import IVFIndex
 
     emb = load_table(spark, "embeddings", sf_dir)
-    stat = os.stat(f"{sf_dir}/embeddings.parquet")
-    digest = hashlib.md5(
-        f"{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_ann_index/{digest}"
-    if not os.path.exists(os.path.join(root, "ann_ivf", "ivf_meta.json")):
-        IVFIndex.build(spark, emb, root, n_centroids=16)
+    root = build_once(
+        _ann_index_path("ivf16", sf_dir),
+        lambda tmp: IVFIndex.build(spark, emb, tmp, n_centroids=16),
+    )
     idx = IVFIndex(root)
     queries_df = emb.filter(F.col("vec_id") < 5)
     return idx.search(spark, queries_df, k=10, n_probe=16)
@@ -408,28 +414,13 @@ def _incremental_ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
     """Build-then-grow IVF index shared by ``ann_index_incremental_search``
     and ``ann_recall_report``: built on the EVEN half of the embeddings
     (centroids train there and stay frozen), odd half ingested in two
-    exactly-once epochs, epoch 1 replayed to prove the no-op. Cached
-    under a data+code digest; the ``_incremental_done`` marker lands only
-    after the full build+ingest+replay sequence, so a crashed half-build
-    is re-run (every step is overwrite/append_idempotent — race-safe)."""
-    import hashlib
-    import os
-
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.operators import ann_index as _ai_mod
-    from spark_data_engineering_spark.operators import similarity as _sim_mod
+    exactly-once epochs, epoch 1 replayed to prove the no-op. Cached: the
+    whole build+ingest+replay sequence runs once per key."""
     from spark_data_engineering_spark.operators.ann_index import IVFIndex
 
-    stat = os.stat(f"{sf_dir}/embeddings.parquet")
-    digest = hashlib.md5(
-        f"ivf_inc:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_ai_mod, _sim_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_ann_index/{digest}"
-    done = os.path.join(root, "ann_ivf", "_incremental_done")
-    if not os.path.exists(done):
+    def build(tmp: str) -> None:
         idx = IVFIndex.build(
-            spark, emb.filter(F.col("vec_id") % 2 == 0), root, n_centroids=16
+            spark, emb.filter(F.col("vec_id") % 2 == 0), tmp, n_centroids=16
         )
         odd = emb.filter(F.col("vec_id") % 2 == 1)
         idx.ingest(spark, odd.filter(F.col("vec_id") % 4 == 1), app_id="inc", epoch_id=1)
@@ -444,9 +435,10 @@ def _incremental_ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame):
             raise AssertionError(
                 "replayed ingest epoch committed — exactly-once broken"
             )
-        with open(done, "w") as f:
-            f.write("ok")
-    return IVFIndex(root)
+
+    return IVFIndex(
+        build_once(cached_index_paths(sf_dir)["ann_index_incremental_search"], build)
+    )
 
 
 @query("ann_index_incremental_search", oracle=_BF_TOP10_ORACLE)
@@ -482,19 +474,13 @@ def ann_ivfpq_search_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-precision table decides — must hash-match the brute-force
     oracle. Production searches are the same code with n_probe < cells
     and a k*4 short list."""
-    import hashlib
-    import os
-
     from spark_data_engineering_spark.operators.ann_index import IVFPQIndex
 
     emb = load_table(spark, "embeddings", sf_dir)
-    stat = os.stat(f"{sf_dir}/embeddings.parquet")
-    digest = hashlib.md5(
-        f"pq:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_ann_index/{digest}"
-    if not os.path.exists(os.path.join(root, "ann_ivfpq", "ivfpq_meta.json")):
-        IVFPQIndex.build(spark, emb, root, n_centroids=16, m=16, n_codes=32)
+    root = build_once(
+        _ann_index_path("pq16", sf_dir),
+        lambda tmp: IVFPQIndex.build(spark, emb, tmp, n_centroids=16, m=16, n_codes=32),
+    )
     idx = IVFPQIndex(root)
     queries_df = emb.filter(F.col("vec_id") < 5)
     return idx.search(

@@ -9,8 +9,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_data_engineering_spark.cacheutil import claim
+from spark_data_engineering_spark.cacheutil import (
+    cache_path,
+    cached,
+    resume_dir,
+    scratch_dir,
+)
 from spark_data_engineering_spark.functions import numeric as NR
+from spark_data_engineering_spark.queries.incremental_q import (
+    orders_ds_table,
+    txn_cached,
+)
 from spark_data_engineering_spark.registry import query
 from spark_data_engineering_spark.sources import load_table
 from spark_data_engineering_spark.streaming.events import EVENT_SCHEMA
@@ -37,19 +46,15 @@ def _state_shuffle(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _txnstream_ckpt() -> str:
-    """Fresh per-run checkpoint dir under a swept root — the txn-stream
-    gate queries checkpoint once per invocation, so without sweeping the
-    root every gate run leaks a directory (round-7 review finding; the
-    same sweep-before-create contract every other /tmp root here uses)."""
-    import uuid
+def _staged_events(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged once into an 8-file copy, so
+    maxFilesPerTrigger yields genuine incremental micro-batches. Shared
+    by every streaming query over the plain events schema."""
 
-    from spark_data_engineering_spark.cacheutil import sweep_stale
+    def build(tmp: str) -> None:
+        load_table(spark, "events", sf_dir).repartition(8).write.parquet(tmp)
 
-    root = "/tmp/spark_de_txnstream_ckpt"
-    sweep_stale(root)
-    os.makedirs(root, exist_ok=True)
-    return f"{root}/{uuid.uuid4().hex}"
+    return cached("stream_input", "events", sf_dir, build, tables=("events",))
 
 
 @query(
@@ -70,19 +75,10 @@ def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     not append — because the gate wants every window, including those a
     watermark would still be holding open at end-of-stream.
 
-    The input is staged once per (session, sf_dir) into a multi-file
-    copy so maxFilesPerTrigger yields genuine incremental batches.
+    The input is staged once into a multi-file copy
+    (``_staged_events``).
     """
-    import hashlib
-
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    # deterministic digest (Python's hash() is process-salted) keyed on
-    # path + source mtime/size so regenerated data invalidates the stage
-    digest = hashlib.md5(f"{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
-        load_table(spark, "events", sf_dir).repartition(8).write.mode("overwrite").parquet(staged)
+    staged = _staged_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 4).parquet(staged)
     )
@@ -131,22 +127,11 @@ def streaming_enriched_event_stats(spark: SparkSession, sf_dir: str) -> DataFram
     production event pipeline runs first. Exactly-once replay of the
     enrichment is pinned in tests/test_streaming.py (same checkpoint →
     zero rows reprocessed)."""
-    import hashlib
-
     from spark_data_engineering_spark.streaming.events import (
         enrich_with_dim_stream,
     )
 
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
-        load_table(spark, "events", sf_dir).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(staged)
+    staged = _staged_events(spark, sf_dir)
     dim = (
         load_table(spark, "customer", sf_dir)
         .filter(F.col("c_acctbal") > 0)
@@ -192,17 +177,9 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches). Only the fingerprint column is returned: which *row* is
     first-seen depends on arrival order, the fingerprint set does not.
     """
-    import hashlib
-
     from spark_data_engineering_spark.streaming.dedup import fingerprint_dedup_stream
 
-    src = f"{sf_dir}/documents.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"dedup:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
+    def build(tmp: str) -> None:
         docs = load_table(spark, "documents", sf_dir)
         dupes = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
             "doc_id", F.col("doc_id") + F.lit(10_000_000)
@@ -216,7 +193,9 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1735689600) + (F.col("doc_id") % F.lit(10_000_000)) + F.when(F.col("doc_id") >= 10_000_000, F.lit(600)).otherwise(F.lit(0))
             ),
         )
-        full.repartition(8).write.mode("overwrite").parquet(staged)
+        full.repartition(8).write.parquet(tmp)
+
+    staged = cached("stream_input", "dedup", sf_dir, build, tables=("documents",))
     schema = spark.read.parquet(staged).schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 4).parquet(staged)
     deduped = fingerprint_dedup_stream(stream, text_col="text", event_time_col="ts", delay="2 hours")
@@ -267,18 +246,7 @@ def streaming_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     including sessions the stream saw split across many batches.
     Complete mode (not append) so end-of-stream state includes every
     session, same reasoning as streaming_hourly_event_stats."""
-    import hashlib
-
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"sess:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
-        load_table(spark, "events", sf_dir).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(staged)
+    staged = _staged_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 4).parquet(staged)
     )
@@ -328,22 +296,16 @@ if ensure_protobuf():
         state every micro-batch (Update mode); the LAST emission per user
         — selected via max(struct) on the strictly-increasing event count
         — must equal the batch per-user aggregate."""
-        import hashlib
-
         from spark_data_engineering_spark.streaming.stateful2 import (
             running_user_totals,
         )
 
-        src = f"{sf_dir}/events.parquet"
-        stat = os.stat(src)
-        digest = hashlib.md5(
-            f"tws:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-        ).hexdigest()[:16]
-        staged = f"/tmp/spark_de_stream_input/{digest}"
-        if not os.path.isdir(staged):
+        def build(tmp: str) -> None:
             load_table(spark, "events", sf_dir).select(
                 "user_id", "value", "ts"
-            ).repartition(8).write.mode("overwrite").parquet(staged)
+            ).repartition(8).write.parquet(tmp)
+
+        staged = cached("stream_input", "tws", sf_dir, build, tables=("events",))
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
@@ -469,20 +431,11 @@ def _stage_doc_batches(sf_dir: str) -> str:
     (contiguous doc_id thirds) under a digest-keyed staging dir, with
     pinned mtimes so the file source replays them in order. Shared by
     every streaming-replay query over documents."""
-    import hashlib
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/documents.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"neardup:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
-        tbl = pq.read_table(src, columns=["doc_id", "text"])
+    def build(tmp: str) -> None:
+        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
         max_id = pa.compute.max(tbl["doc_id"]).as_py()
         t1, t2 = max_id // 3, 2 * max_id // 3
         ids = tbl["doc_id"].to_pylist()
@@ -491,7 +444,6 @@ def _stage_doc_batches(sf_dir: str) -> str:
             [t1 <= i < t2 for i in ids],
             [i >= t2 for i in ids],
         ]
-        tmp = f"{staged}.{uuid.uuid4().hex}.tmp"
         os.makedirs(tmp)
         base = 1735689600
         for k, mask in enumerate(masks):
@@ -499,8 +451,8 @@ def _stage_doc_batches(sf_dir: str) -> str:
             pq.write_table(tbl.filter(pa.array(mask)), path)
             # the file source orders micro-batches by mtime: pin it
             os.utime(path, (base + 60 * k, base + 60 * k))
-        os.rename(tmp, staged)
-    return staged
+
+    return cached("stream_input", "docbatches", sf_dir, build, tables=("documents",))
 
 
 @query("streaming_neardup_survivors", oracle=_NEARDUP_SURVIVOR_ORACLE)
@@ -520,28 +472,30 @@ def streaming_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     root is digest-keyed and reused, so a rerun re-derives identical
     decisions and `append_idempotent` commits nothing twice.
     """
-    import uuid
-
+    from spark_data_engineering_spark.operators import dedup as _dedup_mod
+    from spark_data_engineering_spark.streaming import neardup as _nd_mod
     from spark_data_engineering_spark.streaming.neardup import NearDupIngest
 
     staged = _stage_doc_batches(sf_dir)
-
     # the TxnTable holds DERIVED state: key it on the deriving code too,
     # else a code change replays against old epochs (all skipped) and the
     # gate records evidence for a path that never ran
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.operators import dedup as _dedup_mod
-    from spark_data_engineering_spark.streaming import neardup as _nd_mod
-
-    root = f"/tmp/spark_de_neardup/{os.path.basename(staged)}-{code_digest(_nd_mod, _dedup_mod)}"
-    ingest = NearDupIngest(root)
+    root = cache_path(
+        "neardup",
+        "neardup",
+        sf_dir,
+        streaming_neardup_survivors,
+        tables=("documents",),
+        modules=(_nd_mod, _dedup_mod),
+    )
+    ingest = NearDupIngest(resume_dir(root))
     schema = spark.read.parquet(staged).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    ingest.run(stream, f"/tmp/spark_de_neardup_ckpt/{uuid.uuid4().hex}")
+    ingest.run(stream, scratch_dir("neardup_ckpt"))
     return ingest.docs.read(spark).select(F.col("doc_id").cast("bigint").alias("doc_id"))
 
 
@@ -575,9 +529,6 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch answer, the contract every streaming query here
     obeys. A rerun replays epochs the state has already applied and
     folds nothing twice."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest
     from spark_data_engineering_spark.operators import sketches as _sk_mod
     from spark_data_engineering_spark.operators.sketches import exact_topk_via_sketch
     from spark_data_engineering_spark.streaming import heavyhitters as _hh_mod
@@ -586,15 +537,19 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     staged = _stage_doc_batches(sf_dir)
-    # derived state: key on data AND deriving code so edits re-run
     mg_k = 200
     # keyed on data, deriving code, AND k: a k edit must not reopen a
     # state whose accumulated error bound was set by the old k
-    state_dir = (
-        f"/tmp/spark_de_mgstream/{os.path.basename(staged)}-"
-        f"k{mg_k}-{code_digest(_sk_mod, _hh_mod)}"
+    state_dir = cache_path(
+        "mgstream",
+        "mg",
+        sf_dir,
+        streaming_heavy_hitters,
+        tables=("documents",),
+        modules=(_sk_mod, _hh_mod),
+        params=(mg_k,),
     )
-    hh = StreamingHeavyHitters(state_dir, "token", k=mg_k)
+    hh = StreamingHeavyHitters(resume_dir(state_dir), "token", k=mg_k)
     schema = spark.read.parquet(staged).schema
     stream = (
         spark.readStream.schema(schema)
@@ -604,7 +559,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         stream.writeStream.foreachBatch(hh.process_batch)
-        .option("checkpointLocation", f"/tmp/spark_de_mgstream_ckpt/{uuid.uuid4().hex}")
+        .option("checkpointLocation", scratch_dir("mgstream_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -641,10 +596,6 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs the state already applied and folds nothing twice. This is
     the distinct-count bound HLL cannot give a streaming state: below
     k the accumulated sketch is provably the exact distinct set."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest
     from spark_data_engineering_spark.operators import sketches as _sk_mod
     from spark_data_engineering_spark.queries.events_analytics import (
         _KMV_K,
@@ -653,23 +604,19 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_data_engineering_spark.streaming import kmv as _kmv_mod
     from spark_data_engineering_spark.streaming.kmv import StreamingKMV
 
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_stream_input/{digest}"
-    if not os.path.isdir(staged):
-        load_table(spark, "events", sf_dir).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(staged)
+    staged = _staged_events(spark, sf_dir)
     # derived state: keyed on data, deriving code, AND k (a k edit must
     # not reopen a state truncated at the old k)
-    state_dir = (
-        f"/tmp/spark_de_kmvstream/{digest}-k{_KMV_K}-"
-        f"{code_digest(_sk_mod, _kmv_mod)}"
+    state_dir = cache_path(
+        "kmvstream",
+        "kmv",
+        sf_dir,
+        streaming_distinct_users,
+        tables=("events",),
+        modules=(_sk_mod, _kmv_mod),
+        params=(_KMV_K,),
     )
-    acc = StreamingKMV(state_dir, "event_type", "user_id", k=_KMV_K)
+    acc = StreamingKMV(resume_dir(state_dir), "event_type", "user_id", k=_KMV_K)
     stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -677,9 +624,7 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         stream.writeStream.foreachBatch(acc.process_batch)
-        .option(
-            "checkpointLocation", f"/tmp/spark_de_kmvstream_ckpt/{uuid.uuid4().hex}"
-        )
+        .option("checkpointLocation", scratch_dir("kmvstream_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -716,10 +661,6 @@ def streaming_txn_source_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     log; incremental multi-batch tailing + the non-append abort are
     pinned in tests/test_txn_datasource.py. This is the lakehouse CDC
     shape (Delta/Iceberg streaming source) under the correctness gate."""
-    import uuid
-
-    from spark_data_engineering_spark.queries.incremental_q import orders_ds_table
-
     table = orders_ds_table(spark, sf_dir)
     stream = spark.readStream.format("txn").load(table.table_dir)
     agg = stream.groupBy("o_orderstatus").agg(
@@ -740,7 +681,7 @@ def streaming_txn_source_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", _txnstream_ckpt())
+            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
             .start()
         )
     try:
@@ -784,15 +725,8 @@ def streaming_txn_sink_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per epoch the sink does one parquet file per task (no extra
     shuffle) plus one JSON log append regardless of epoch size; the
     watermark check is one metadata read of the last commit chain."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
-    from spark_data_engineering_spark.queries.incremental_q import orders_ds_table
-
     src = orders_ds_table(spark, sf_dir)
-    os.makedirs("/tmp/spark_de_streamsink", exist_ok=True)
-    sweep_stale("/tmp/spark_de_streamsink")
-    run = f"/tmp/spark_de_streamsink/{uuid.uuid4().hex}"
+    run = scratch_dir("streamsink")
     sink_dir = f"{run}/orders_sink"
     q = (
         spark.readStream.format("txn")
@@ -820,32 +754,17 @@ def streaming_txn_sink_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def orders_cdf_table_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, cached on source mtime+size+code digest) the orders
-    txn table with a change-feed-worthy history — two appends and a
+    """Build (once, cached) the orders txn table with a
+    change-feed-worthy history — two appends and a
     merge-on-read DV delete — shared by ``streaming_txn_cdf_revenue``
     (in-memory fold) and ``streaming_materialized_view_revenue``
     (persistent exactly-once fold), so both gates stream the SAME log."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
 
     register_txn(spark)
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"cdf:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/cdf-{digest}"
-    if not claim(root):
-        import shutil as _sh
 
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_cdf")
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -853,10 +772,8 @@ def orders_cdf_table_dir(spark: SparkSession, sf_dir: str) -> str:
         t.append(o.filter(F.col("o_orderkey") % 2 == 0).repartition(3))
         t.append(o.filter(F.col("o_orderkey") % 2 == 1).repartition(2))
         t.delete_where_dv(spark, F.col("o_orderkey") % 9 == 4)
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("cdf", sf_dir, build)
     return TxnTable(root, "orders_cdf").table_dir
 
 
@@ -892,9 +809,6 @@ def streaming_txn_cdf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     file, reading only those positions); no row-level diff job ever
     runs, and rewrite-family commits are refused rather than silently
     mis-fed."""
-    import hashlib
-    import uuid
-
     table_dir = orders_cdf_table_dir(spark, sf_dir)
     stream = (
         spark.readStream.format("txn")
@@ -922,7 +836,7 @@ def streaming_txn_cdf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", _txnstream_ckpt())
+            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
             .start()
         )
     try:
@@ -963,15 +877,10 @@ def streaming_materialized_view_revenue(spark: SparkSession, sf_dir: str) -> Dat
     one metadata commit — cost tracks CHANGED data and state size,
     never the base table; the state table is time-travelable history of
     the view for free."""
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import sweep_stale
     from spark_data_engineering_spark.sources.txn import TxnTable
 
     table_dir = orders_cdf_table_dir(spark, sf_dir)
-    os.makedirs("/tmp/spark_de_mview", exist_ok=True)
-    sweep_stale("/tmp/spark_de_mview")
-    run = f"/tmp/spark_de_mview/{uuid.uuid4().hex}"
+    run = scratch_dir("mview")
     state_root = f"{run}/state"
     app = "mview-gate"
 
@@ -1022,34 +931,19 @@ def streaming_materialized_view_revenue(spark: SparkSession, sf_dir: str) -> Dat
 
 
 def orders_cdf_merge_table_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, cached on source mtime+size+code digest) an orders
-    txn table whose history ends in a ``merge(cdf=True)`` — two appends,
+    """Build (once, cached) an orders txn table whose history ends in a
+    ``merge(cdf=True)`` — two appends,
     a merge-on-read DV delete, then a MERGE that updates the %7==3 keys
     (price+100, status 'U'), deletes the %11==6 keys via delete markers,
     and inserts new 'N' keys for %13==5 — the MERGE-heavy lakehouse
     shape whose change feed is only streamable through the persisted
     update images (round 8; a diff-planned stream must abort here)."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
 
     register_txn(spark)
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"cdfm:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/cdfm-{digest}"
-    if not claim(root):
-        import shutil as _sh
 
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         t = TxnTable(tmp_root, "orders_cdfm")
         k = F.col("o_orderkey")
         o = load_table(spark, "orders", sf_dir).select(
@@ -1089,10 +983,8 @@ def orders_cdf_merge_table_dir(spark: SparkSession, sf_dir: str) -> str:
             matched_delete_condition=F.col("o_totalprice") < 0,
             cdf=True,
         )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published first
+
+    root = txn_cached("cdfm", sf_dir, build)
     return TxnTable(root, "orders_cdfm").table_dir
 
 
@@ -1166,7 +1058,7 @@ def streaming_txn_cdf_merge_revenue(spark: SparkSession, sf_dir: str) -> DataFra
             agg.writeStream.outputMode("complete")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", _txnstream_ckpt())
+            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
             .start()
         )
     try:
@@ -1218,38 +1110,26 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
     streaming aggregation after a stream-stream join needs no
     demonstration here and would couple the gate to multi-stateful
     watermark propagation."""
-    import hashlib
-
     from spark_data_engineering_spark.streaming.joins import (
         interval_join_streams,
     )
 
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
     # each stream gets its OWN staged topic (clicks / purchases, only
     # the columns that side carries) — in production the two sides ARE
     # separate topics; sharing one staged copy would make every trigger
     # scan both event types twice and discard 80% of the bytes read
-    staged = f"/tmp/spark_de_stream_input/{digest}-cpjoin"
-    # _SUCCESS markers, not dir existence: a crash between the two
-    # topic writes must not leave a half-staged cache a later run
-    # trusts (overwrite mode makes the re-stage self-healing)
-    if not all(
-        os.path.exists(f"{staged}/{t}/_SUCCESS")
-        for t in ("clicks", "purchases")
-    ):
+    def build(tmp: str) -> None:
         ev = load_table(spark, "events", sf_dir)
         ev.filter(F.col("event_type") == "click").select(
             F.col("user_id").alias("click_user"), F.col("ts").alias("click_ts")
-        ).repartition(3).write.mode("overwrite").parquet(f"{staged}/clicks")
+        ).repartition(3).write.parquet(f"{tmp}/clicks")
         ev.filter(F.col("event_type") == "purchase").select(
             F.col("user_id").alias("purchase_user"),
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value_raw"),
-        ).repartition(3).write.mode("overwrite").parquet(f"{staged}/purchases")
+        ).repartition(3).write.parquet(f"{tmp}/purchases")
+
+    staged = cached("stream_input", "cpjoin", sf_dir, build, tables=("events",))
 
     def side(topic: str, schema: str) -> DataFrame:
         return (
@@ -1332,27 +1212,11 @@ def streaming_txn_upsert_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     key semi-join + copy-on-write of touched files) — state table size
     never enters it; cached build keyed on data + code digest,
     steady-state is the read-back."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.streaming import upsert as _ups_mod
     from spark_data_engineering_spark.streaming.upsert import stream_upsert_to_txn
 
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"ups:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}:{code_digest(_ups_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/ups-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1380,10 +1244,8 @@ def streaming_txn_upsert_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 f"seed/final counts off ({n_seed} / {n_final})"
             )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("ups", sf_dir, build, modules=(_ups_mod,))
     table = TxnTable(root, "orders_state")
     return (
         table.read(spark)
@@ -1436,34 +1298,19 @@ def streaming_expectations_quarantine(
     quarantine epoch, or a mis-attributed reason array each breaks the
     hash. Per-epoch cost is one persist + two map-side filters of the
     micro-batch; table sizes never enter it."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
     from spark_data_engineering_spark.pipeline import expectations as _exp_mod
     from spark_data_engineering_spark.pipeline.expectations import (
         Expectation,
         stream_with_expectations,
     )
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import TxnTable
 
     exps = (
         Expectation("price_cap", "o_totalprice < 300000", "drop"),
         Expectation("key_mod", "o_orderkey % 10 <> 0", "drop"),
     )
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"sexp:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}:{code_digest(_exp_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/sexp-{digest}"
-    if not claim(root):
-        import shutil as _sh
 
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1482,10 +1329,8 @@ def streaming_expectations_quarantine(
         q.awaitTermination()
         if main.last_epoch("sexp-gate") < 1 or dead.last_epoch("sexp-gate") < 1:
             raise AssertionError("expectations stream ran fewer than 2 epochs")
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("sexp", sf_dir, build, modules=(_exp_mod,))
     main = TxnTable(root, "orders_clean")
     dead = TxnTable(root, "orders_dead")
     kept = (
@@ -1541,29 +1386,13 @@ def txn_autocompact_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back aggregate hash-matches plain SQL, proving the interleaved
     compact commits never dropped or duplicated a row (exactly-once
     epoch watermarks ride the append commits, compaction is net-zero)."""
-    import hashlib
-    import uuid
-
-    from spark_data_engineering_spark.cacheutil import code_digest, sweep_stale
-    from spark_data_engineering_spark.sources import txn as _txn_mod
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.streaming import events as _ev_mod
     from spark_data_engineering_spark.streaming.events import (
         stream_to_txn_table,
     )
 
-    stat = os.stat(f"{sf_dir}/orders.parquet")
-    digest = hashlib.md5(
-        f"acomp:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_txn_mod)}:{code_digest(_ev_mod)}".encode()
-    ).hexdigest()[:16]
-    os.makedirs("/tmp/spark_de_incremental", exist_ok=True)
-    sweep_stale("/tmp/spark_de_incremental")
-    root = f"/tmp/spark_de_incremental/acomp-{digest}"
-    if not claim(root):
-        import shutil as _sh
-
-        tmp_root = f"{root}.build-{uuid.uuid4().hex}"
+    def build(tmp_root: str) -> None:
         o = load_table(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1590,10 +1419,8 @@ def txn_autocompact_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"auto-compact left {n_live} live files (epoch-count "
                 "growth — compaction never fired)"
             )
-        try:
-            os.rename(tmp_root, root)
-        except OSError:
-            _sh.rmtree(tmp_root, ignore_errors=True)  # racer published
+
+    root = txn_cached("acomp", sf_dir, build, modules=(_ev_mod,))
     t = TxnTable(root, "orders_ac")
     return (
         t.read(spark)

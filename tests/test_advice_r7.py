@@ -20,8 +20,9 @@
    descriptive 'version no longer readable, data vacuumed' message.
 4. (low) the txn-stream gate queries wrote per-run uuid checkpoint dirs
    under ``/tmp/spark_de_txnstream_ckpt/`` without ever sweeping the
-   root — unbounded leak across gate runs. ``_txnstream_ckpt`` now
-   sweeps stale entries before creating the next dir.
+   root — unbounded leak across gate runs. Every per-call directory
+   (that checkpoint root and the others below) now comes from
+   ``cacheutil.scratch_dir``, which sweeps stale entries first.
 """
 
 from __future__ import annotations
@@ -144,17 +145,41 @@ def test_cdf_refuses_vacuumed_delete_target(spark, tmp_path):
         q.stop()
 
 
-def test_txnstream_ckpt_root_is_swept():
-    """Finding 4: stale per-run checkpoint dirs under the shared root
-    are collected the next time a txn-stream gate query makes one."""
-    from spark_data_engineering_spark.queries.streaming_q import _txnstream_ckpt
+# every root a query makes a fresh per-call directory under
+_SCRATCH_ROOTS = (
+    "txnstream_ckpt",
+    "neardup_ckpt",
+    "mgstream_ckpt",
+    "kmvstream_ckpt",
+    "txnsnap",
+    "dv",
+    "export",
+    "streamsink",
+    "mview",
+    "deadletter",
+)
 
-    root = "/tmp/spark_de_txnstream_ckpt"
-    os.makedirs(root, exist_ok=True)
+
+@pytest.mark.parametrize("namespace", _SCRATCH_ROOTS)
+def test_txnstream_ckpt_root_is_swept(namespace):
+    """Finding 4: stale per-run dirs under a shared scratch root are
+    collected the next time a query makes one — and the queries make
+    them only through ``scratch_dir``."""
+    from pathlib import Path
+
+    from spark_data_engineering_spark import cacheutil
+
+    qdir = Path(cacheutil.__file__).parent / "queries"
+    used = "".join(p.read_text() for p in qdir.glob("*.py"))
+    assert f'scratch_dir("{namespace}"' in used
+    root = cacheutil.cache_root(namespace)
     stale = os.path.join(root, "stale-advr7")
     os.makedirs(stale, exist_ok=True)
     old = time.time() - 7200
     os.utime(stale, (old, old))
-    fresh = _txnstream_ckpt()
-    assert not os.path.isdir(stale)
-    assert fresh.startswith(root)
+    fresh = cacheutil.scratch_dir(namespace)
+    try:
+        assert not os.path.isdir(stale)
+        assert os.path.dirname(fresh) == root and os.listdir(fresh) == []
+    finally:
+        os.rmdir(fresh)

@@ -11,19 +11,18 @@
 4. (low) a conditional by-source clause rewrites only the zero-match
    files that actually CONTAIN condition-hit rows.
 5. (low) ``sweep_stale`` tombstone-first deletion: stale entries go,
-   fresh entries stay, orphaned tombstones are reaped.
+   fresh entries stay, orphaned tombstones are reaped (tested in
+   tests/test_cacheutil.py).
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from spark_data_engineering_spark import cacheutil
 from spark_data_engineering_spark.sources.txn import TxnTable
 
 
@@ -168,36 +167,3 @@ def test_conditional_by_source_update_skips_nonhit_files(spark, tmp_path):
     assert len(before & set(t.live_files())) == 1  # k=20 file untouched
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got == {1: "a", 2: "b", 10: "CLOSED", 20: "p"}
-
-
-# ---- 5: sweep_stale tombstone-first ------------------------------------
-
-
-def test_sweep_stale_tombstone_behavior(tmp_path):
-    parent = str(tmp_path / "cache")
-    os.makedirs(os.path.join(parent, "stale"))
-    os.makedirs(os.path.join(parent, "fresh"))
-    os.makedirs(os.path.join(parent, "orphan.sweeping-123"))
-    os.makedirs(os.path.join(parent, "live.sweeping-456"))
-    old = time.time() - 7200
-    os.utime(os.path.join(parent, "stale"), (old, old))
-    os.utime(os.path.join(parent, "orphan.sweeping-123"), (old, old))
-    cacheutil.sweep_stale(parent, max_age_s=3600)
-    left = set(os.listdir(parent))
-    # stale entry reaped; STALE orphaned tombstone reaped; a FRESH
-    # tombstone (round-10 advice) is a live concurrent sweeper's
-    # pending restore-or-delete — left alone so a claim() that already
-    # returned True cannot lose its entry to a second sweeper
-    assert left == {"fresh", "live.sweeping-456"}
-
-
-def test_claim_refreshes_and_saves_from_sweep(tmp_path):
-    parent = str(tmp_path / "cache")
-    root = os.path.join(parent, "entry")
-    os.makedirs(root)
-    old = time.time() - 7200
-    os.utime(root, (old, old))
-    assert cacheutil.claim(root)  # hit refreshes mtime
-    cacheutil.sweep_stale(parent, max_age_s=3600)
-    assert os.path.isdir(root)  # claimed entry survives the sweep
-    assert not cacheutil.claim(os.path.join(parent, "missing"))

@@ -44,23 +44,8 @@ def test_roundtrip_value_identical(spark, sf_dir, fmt):
 
 
 def test_xml_roundtrip_value_identical(spark, sf_dir):
-    import hashlib
-    import os
-
-    # stage through the registered query's own path
-    import __spark_entry__ as entrymod  # noqa: F401
-
-    from spark_data_engineering_spark.queries.formats import (
-        xml_events_hourly_stats,
-    )
-
-    xml_events_hourly_stats(spark, sf_dir).limit(1).collect()  # ensures staged
-    src = f"{sf_dir}/events.parquet"
-    stat = os.stat(src)
-    digest = hashlib.md5(
-        f"xml:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}".encode()
-    ).hexdigest()[:16]
-    staged = f"/tmp/spark_de_fmt/xml/{digest}"
+    # the same staged copy xml_events_hourly_stats reads
+    staged = _staged(spark, sf_dir, "xml")
     got = (
         spark.read.schema(_SCHEMA)
         .format("xml")

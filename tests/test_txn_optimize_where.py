@@ -99,22 +99,3 @@ def test_where_with_zorder_clusters_the_scoped_partition(spark, part_table):
     pruned = t.prune_files({"amount": (90, 95)})
     assert len(pruned) < len(live)
     assert t.read(spark).filter("status = 'B'").count() == 400
-
-
-def test_claim_refreshes_mtime(tmp_path):
-    """claim() on a cache hit must utime the root so a concurrent
-    sweep_stale (1h cutoff) can't reap an entry in active use."""
-    import os
-    import time
-
-    from spark_data_engineering_spark.cacheutil import claim, sweep_stale
-
-    parent = tmp_path / "cache"
-    root = parent / "entry"
-    root.mkdir(parents=True)
-    old = time.time() - 7200
-    os.utime(root, (old, old))
-    assert claim(str(root))  # hit: refreshes mtime
-    sweep_stale(str(parent))  # would have reaped the 2h-old entry
-    assert root.is_dir()
-    assert not claim(str(root / "missing"))

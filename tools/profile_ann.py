@@ -28,28 +28,17 @@ def main() -> None:
     emb = load_table(spark, "embeddings", sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 5)
 
+    from spark_data_engineering_spark.operators.ann_index import IVFIndex, IVFPQIndex
     from spark_data_engineering_spark.queries.similarity import (
         _incremental_ivf_index,
         ann_recall_report,
+        cached_index_paths,
     )
 
     # warm the cached indexes + JVM before timing
     ann_recall_report(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    import hashlib
-    import os
-
-    from spark_data_engineering_spark.cacheutil import code_digest
-    from spark_data_engineering_spark.operators import ann_index as _ai_mod
-    from spark_data_engineering_spark.operators import similarity as _sim_mod
-    from spark_data_engineering_spark.operators.ann_index import IVFIndex, IVFPQIndex
-
-    stat = os.stat(f"{sf_dir}/embeddings.parquet")
-    digest = hashlib.md5(
-        f"ivf32:{sf_dir}:{stat.st_mtime_ns}:{stat.st_size}:"
-        f"{code_digest(_ai_mod, _sim_mod)}".encode()
-    ).hexdigest()[:16]
-    root = f"/tmp/spark_de_ann_index/{digest}"
+    root = cached_index_paths(sf_dir)["ann_recall_report"]
     idx = IVFIndex(root)
     pq_idx = IVFPQIndex(root)
 

@@ -40,14 +40,14 @@ def _warm_stream_worker(spark) -> None:
     the clock: run a minimal format('txn') stream end-to-end once. A
     failure here only costs warm-up (never a smoke result)."""
     import shutil
-    import uuid
 
     from pyspark.sql import functions as F
 
+    from spark_data_engineering_spark.cacheutil import scratch_dir
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
 
-    root = f"/tmp/spark_de_smokewarm/{uuid.uuid4().hex}"
+    root = scratch_dir("smokewarm")
     try:
         register_txn(spark)
         t = TxnTable(root, "warm")
