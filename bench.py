@@ -39,8 +39,9 @@ registry.load_all()
 #    pagerank_click_graph, approx_distinct_parts,
 #    approx_quantiles_lineitem, cdc_boilerplate_chunks, dedup_clusters,
 #    embedding_dup_clusters. All enter below. (Late-round tuning — the
-#    shared _state_shuffle knob, fewer micro-batches at the same
-#    cross-batch semantics, cached incremental lifecycles — then pushed
+#    8-partition state width (streaming_q.STATE_CONFS), fewer
+#    micro-batches at the same cross-batch semantics, cached
+#    incremental lifecycles — then pushed
 #    a number of these back UNDER the bar; they stay benched, since the
 #    tier-1 rule is a superset requirement, not an exact set.)
 #

@@ -1,6 +1,7 @@
-"""Structured-Streaming query under the correctness gate: the streaming
-hourly aggregation must hash-match the SAME DuckDB oracle as its batch
-twin — end-of-stream (availableNow) state equals the batch answer."""
+"""Structured-Streaming queries under the correctness gate: each
+stream's end-of-stream state must hash-match the SAME DuckDB oracle as
+its batch twin. Every gate runs its stream through
+``streaming.events.drain``; what differs between gates is the plan."""
 
 from __future__ import annotations
 
@@ -22,28 +23,12 @@ from spark_data_engineering_spark.queries.incremental_q import (
 )
 from spark_data_engineering_spark.registry import query
 from spark_data_engineering_spark.sources import load_table
-from spark_data_engineering_spark.streaming.events import EVENT_SCHEMA
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _state_shuffle(spark: SparkSession, n: int = 8):
-    """Per-query STATE shuffle width (the streaming_click_purchase_join
-    note, shared): stateful operators keep state per shuffle partition
-    and the state store commits one delta file per partition per
-    micro-batch — at gate volume 32 partitions is mostly store-commit
-    overhead (measured ~2× on the interval join and the
-    transformWithState query). Production sizes this by key rate ×
-    state size; it is baked into the checkpoint at FIRST start, which
-    is why the conf wraps .start() (fresh checkpoints per run here)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+from spark_data_engineering_spark.streaming.events import (
+    EVENT_SCHEMA,
+    STATE_CONFS,
+    drain,
+    run_to_memory,
+)
 
 
 def _staged_events(spark: SparkSession, sf_dir: str) -> str:
@@ -85,17 +70,8 @@ def streaming_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("sum_value_raw")
     )
-    name = "streaming_hourly_gate"
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = run_to_memory(agg, "streaming_hourly_gate", "complete", STATE_CONFS)
+    return out.select(
         F.col("w.start").alias("hour"),
         "event_type",
         "n_events",
@@ -145,17 +121,8 @@ def streaming_enriched_event_stats(spark: SparkSession, sf_dir: str) -> DataFram
     agg = enrich_with_dim_stream(stream, dim, "user_id").groupBy(
         "c_mktsegment", "event_type"
     ).agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value_raw"))
-    name = "streaming_enriched_gate"
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = run_to_memory(agg, "streaming_enriched_gate", "complete", STATE_CONFS)
+    return out.select(
         F.col("c_mktsegment").alias("segment"),
         "event_type",
         "n_events",
@@ -199,17 +166,8 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(staged).schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 4).parquet(staged)
     deduped = fingerprint_dedup_stream(stream, text_col="text", event_time_col="ts", delay="2 hours")
-    name = "streaming_dedup_gate"
-    with _state_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("fp")
+    out = run_to_memory(deduped, "streaming_dedup_gate", confs=STATE_CONFS)
+    return out.select("fp")
 
 
 @query(
@@ -253,17 +211,8 @@ def streaming_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(
         F.session_window("ts", "30 minutes").alias("w"), "user_id"
     ).agg(F.count("*").alias("n_events"), F.sum("value").alias("_raw"))
-    name = "streaming_sessionize_gate"
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    out = run_to_memory(agg, "streaming_sessionize_gate", "complete", STATE_CONFS)
+    return out.select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -306,44 +255,29 @@ if ensure_protobuf():
             ).repartition(8).write.parquet(tmp)
 
         staged = cached("stream_input", "tws", sf_dir, build, tables=("events",))
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        # state shuffle width is a per-query knob (the click_purchase
-        # note): the stateful processor commits one RocksDB delta per
-        # shuffle partition per micro-batch, so 32 partitions at gate
-        # volume is mostly store-commit overhead — 8 halves the wall;
-        # baked into the checkpoint at first start (fresh per run here).
         # 4 files/trigger keeps the cross-batch state accumulation the
         # query exists to prove (2 micro-batches) without paying
         # scheduling for 4.
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            stream = (
-                spark.readStream.schema("user_id bigint, value double, ts timestamp")
-                .option("maxFilesPerTrigger", 4)
-                .parquet(staged)
-            )
-            name = "streaming_tws_gate"
-            q = (
-                running_user_totals(stream)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        stream = (
+            spark.readStream.schema("user_id bigint, value double, ts timestamp")
+            .option("maxFilesPerTrigger", 4)
+            .parquet(staged)
+        )
+        out = run_to_memory(
+            running_user_totals(stream),
+            "streaming_tws_gate",
+            "update",
+            {
+                **STATE_CONFS,
+                "spark.sql.streaming.stateStore.providerClass": (
+                    "org.apache.spark.sql.execution.streaming.state."
+                    "RocksDBStateStoreProvider"
+                ),
+            },
+        )
         last = F.max(F.struct("n_events", "total_value")).alias("s")
         return (
-            spark.table(name)
-            .groupBy("user_id")
+            out.groupBy("user_id")
             .agg(last)
             .select(
                 "user_id",
@@ -495,7 +429,7 @@ def streaming_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    ingest.run(stream, scratch_dir("neardup_ckpt"))
+    ingest.run(stream)
     return ingest.docs.read(spark).select(F.col("doc_id").cast("bigint").alias("doc_id"))
 
 
@@ -557,13 +491,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(staged)
         .select(F.explode(F.split("text", " ")).alias("token"))
     )
-    q = (
-        stream.writeStream.foreachBatch(hh.process_batch)
-        .option("checkpointLocation", scratch_dir("mgstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(hh.process_batch))
     mg = hh.summary()
     docs = load_table(spark, "documents", sf_dir)
     tokens = docs.select(F.explode(F.split("text", " ")).alias("token"))
@@ -622,13 +550,7 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(staged)
     )
-    q = (
-        stream.writeStream.foreachBatch(acc.process_batch)
-        .option("checkpointLocation", scratch_dir("kmvstream_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(acc.process_batch))
     rows = [
         (grp, int(hv)) for grp, hs in acc.sketches().items() for hv in hs
     ]
@@ -670,25 +592,8 @@ def streaming_txn_source_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("revenue"),
         F.max("o_totalprice").alias("max_price_raw"),
     )
-    name = "streaming_txn_source_gate"
-    # r14: 8 state partitions (the shared _state_shuffle knob the other
-    # stateful demos already use) — at 32 the complete-mode aggregate
-    # committed 32 near-empty state stores per epoch; measured addBatch
-    # 2.1 s -> 0.9-1.1 s on the CDF feed. Fresh checkpoint per run, so
-    # the conf wraps .start() exactly like the other gate queries.
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    out = run_to_memory(agg, "streaming_txn_source_gate", "complete", STATE_CONFS)
+    return out.select(
         "o_orderstatus",
         "n_orders",
         "revenue",
@@ -728,18 +633,13 @@ def streaming_txn_sink_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = orders_ds_table(spark, sf_dir)
     run = scratch_dir("streamsink")
     sink_dir = f"{run}/orders_sink"
-    q = (
+    drain(
         spark.readStream.format("txn")
         .load(src.table_dir)
         .writeStream.format("txn")
         .option("txnAppId", "gate-pipe")
-        .option("checkpointLocation", f"{run}/ckpt")
-        .start(sink_dir)
+        .option("path", sink_dir)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
         spark.read.format("txn")
         .load(sink_dir)
@@ -825,25 +725,8 @@ def streaming_txn_cdf_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("revenue"),
     )
-    name = "streaming_txn_cdf_gate"
-    # r14: 8 state partitions (the shared _state_shuffle knob the other
-    # stateful demos already use) — at 32 the complete-mode aggregate
-    # committed 32 near-empty state stores per epoch; measured addBatch
-    # 2.1 s -> 0.9-1.1 s on the CDF feed. Fresh checkpoint per run, so
-    # the conf wraps .start() exactly like the other gate queries.
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("o_orderstatus", "n_orders", "revenue")
+    out = run_to_memory(agg, "streaming_txn_cdf_gate", "complete", STATE_CONFS)
+    return out.select("o_orderstatus", "n_orders", "revenue")
 
 
 @query(
@@ -910,19 +793,13 @@ def streaming_materialized_view_revenue(spark: SparkSession, sf_dir: str) -> Dat
         # one atomic commit per epoch, watermarked: replay-proof
         state.overwrite(delta.coalesce(1), txn=(app, batch_id))
 
-    q = (
+    drain(
         spark.readStream.format("txn")
         .option("readChangeFeed", "true")
         .option("startingVersion", "0")
         .load(table_dir)
         .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{run}/ckpt")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return TxnTable(state_root, "view").read(spark).select(
         "o_orderstatus",
         "n_orders",
@@ -1047,27 +924,9 @@ def streaming_txn_cdf_merge_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         .cast("double")
         .alias("revenue"),
     )
-    name = "streaming_txn_cdf_merge_gate"
-    # r14: 8 state partitions (the shared _state_shuffle knob the other
-    # stateful demos already use) — at 32 the complete-mode aggregate
-    # committed 32 near-empty state stores per epoch; measured addBatch
-    # 2.1 s -> 0.9-1.1 s on the CDF feed. Fresh checkpoint per run, so
-    # the conf wraps .start() exactly like the other gate queries.
-    with _state_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", scratch_dir("txnstream_ckpt"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = run_to_memory(agg, "streaming_txn_cdf_merge_gate", "complete", STATE_CONFS)
     return (
-        spark.table(name)
-        .filter(F.col("n_orders") > 0)
+        out.filter(F.col("n_orders") > 0)
         .select("o_orderstatus", "n_orders", "revenue")
     )
 
@@ -1153,32 +1012,9 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         max_gap="1 hour",
         watermark="45 days",
     ).select("click_ts", "purchase_value_raw")
-    name = "streaming_click_purchase_gate"
-    # State shuffle width is a PER-QUERY knob, not the session's batch
-    # default: the symmetric join keeps left+right state per shuffle
-    # partition and the HDFS state store commits one delta file per
-    # partition per side per micro-batch — at gate volume 32 partitions
-    # is ~2x pure commit overhead (measured 8.3 s -> 4.2 s steady at
-    # sf0.1 with 8; the rest is trigger scheduling, not data or state).
-    # Production sizes this by key rate x state size;
-    # it is baked into the checkpoint at first start, which is why it
-    # must be set BEFORE .start() (fresh temp checkpoint per run here).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    out = run_to_memory(joined, "streaming_click_purchase_gate", confs=STATE_CONFS)
     return (
-        spark.table(name)
-        .groupBy(F.date_trunc("day", F.col("click_ts")).alias("click_day"))
+        out.groupBy(F.date_trunc("day", F.col("click_ts")).alias("click_day"))
         .agg(
             F.count("*").alias("n_pairs"),
             NR.round2(F.sum("purchase_value_raw")).alias("purchase_value"),

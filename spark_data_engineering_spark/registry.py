@@ -43,8 +43,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # IS the evidence window. With ~190 oracled queries and 50 slots a full
 # refresh takes >= 4 rounds, so the window is derived MECHANICALLY each
 # round by the codified priority rule (VERDICT r7 task 4; implementation:
-# tools/derive_window.py, run with --check to diff this tuple against the
-# rule's output):
+# tools/derive_window.py: --check diffs this tuple against the rule's
+# output, --write rewrites it):
 #
 #   P1. NEVER-driver-checked oracled queries first (registration order) —
 #       new surfaces enter the window the round they land.
@@ -54,671 +54,58 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #       machinery family (the tool's FAMILIES map names representative ->
 #       covered members); what still overflows is cut at registration
 #       order and rotates in next round under P2 by construction.
-#
-# Round-9 derivation (tools/derive_window.py against CORRECTNESS_r01-r08):
-#   P1 = 6: the 3 rows RED in CORRECTNESS_r08 (txn_pushdown_revenue,
-#        txn_writer_roundtrip_revenue, streaming_txn_sink_revenue — one
-#        shared root cause, the pushFilters/filterPushdown.enabled conf
-#        coupling, fixed this round via register_txn; a red row counts
-#        as never-green and re-enters at the head) plus the
-#        three round-9 gate queries txn_detail_summary (DESCRIBE
-#        DETAIL), txn_properties_revenue (TBLPROPERTIES), and
-#        txn_convert_revenue (CONVERT TO DELTA).
-#   P2 = the 2 r4-stale names cut by round-8 P1 (token_run_lengths,
-#        customer_trailing_7d_revenue — the queue heads by
-#        construction), then the r5 cohort (50 names), oldest first.
-#   P3 = the r5 cohort overflows by 6: tpch_q8/q9/q11/q15/q16/q20 cut
-#        at registration order (family coverage for the multi-join
-#        aggregation machinery stays in-window via q5/q7/q10); they
-#        head the r10 P2 queue by construction.
 CHECK_PRIORITY: tuple[str, ...] = (
-    # r14 rotation after CORRECTNESS_r13 landed: P1 never-checked
-    # (none), P2 oldest-green cohorts first (r12-refreshed set rotates
-    # out, the r11-and-older cohort rotates in), P3 family
-    # representatives per derive_window.FAMILIES.
-    "txn_reorg_purge_revenue",
-    "txn_manifest_revenue",
-    "txn_merge_sync_revenue",
-    "txn_history_audit",
-    "media_decode_metadata",
-    "media_frame_samples",
-    "approx_distinct_parts",
-    "events_json_extract",
-    "sql_revenue_by_nation",
-    "signup_cohort_retention",
-    "approx_quantiles_lineitem",
-    "customer_trailing_7d_revenue",
-    "salted_join_brand_quantity",
-    "text_index_search",
-    "embedding_near_dup",
-    "knn_ivf_exhaustive",
-    "knn_lsh_exhaustive",
-    "semantic_dedup_report",
-    "streaming_hourly_event_stats",
-    "streaming_txn_sink_revenue",
-    "doc_stats",
-    "doc_quality_and_lang",
-    "heavy_hitter_tokens",
-    "token_run_lengths",
-    "tpch_q6_forecast_revenue",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_priority_exists",
-    "mixture_sample_counts",
-    "context_length_buckets",
-    "benchmark_contamination",
-    "chunk_documents",
-    "boilerplate_chunks",
-    "doc_classifier_scores",
-    "curation_decisions",
-    "export_training_shards",
-    "export_shuffled_shards",
-    "padding_efficiency_report",
-    "cdc_boilerplate_chunks",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "dedup_keep_best",
-    "containment_pairs",
-    "dedup_cluster_stats",
-    "csv_events_hourly_stats",
-    "pagerank_click_graph",
-    "incremental_daily_revenue",
-    "incremental_daily_revenue_merged",
-    "incremental_daily_order_report",
-)
-
-
-# The round-11 window, kept for the audit trail.
-_R11_WINDOW: tuple[str, ...] = (
+    # Derived by tools/derive_window.py --write.
+    "txn_datasource_revenue",
+    "dv_delete_report",
+    "bloom_index_point_lookup",
+    "txn_add_column_default_revenue",
+    "txn_analyze_histogram",
+    "txn_show_partitions",
+    "txn_analyze_stats",
+    "txn_hive_convert_revenue",
+    "media_resize_profile",
+    "dp_source_counts",
+    "brand_type_metrics",
+    "tpch_q10_returned_items",
+    "tpch_q12_priority_classes",
+    "tpch_q13_customer_distribution",
+    "tpch_q14_promo_effect",
+    "tpch_q17_small_qty_revenue",
+    "tpch_q18_volume_customers",
+    "tpch_q19_disjunctive_revenue",
+    "tpch_q21_sole_returned_supplier",
+    "tpch_q22_dormant_customers",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q7_nation_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q9_product_type_profit",
+    "tpch_q11_important_stock",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_part_counts",
+    "tpch_q20_part_promotion_suppliers",
+    "pack_documents_greedy",
+    "export_jsonl_shards",
+    "preference_pairs",
+    "jaccard_prefix_pairs",
+    "simhash_near_pairs",
+    "dedup_clusters",
+    "concurrent_sessions",
+    "kmv_distinct_users",
+    "kmv_audience_overlap",
+    "jsonl_events_hourly_stats",
+    "orc_events_hourly_stats",
+    "xml_events_hourly_stats",
+    "neardup_triangle_stats",
+    "incremental_scd2_tiers",
+    "zorder_pruned_revenue",
+    "txn_maintenance_report",
     "txn_set_drop_default_revenue",
     "txn_partition_evolution_revenue",
     "txn_merge_evolution_revenue",
     "txn_analyze_equiheight",
-    "preference_pairs",
-    "salted_distinct_customers_by_status",
-    "join_skew_report",
-    "winsorized_revenue_by_priority",
-    "daily_category_report_approx",
-    "bm25_keyword_search",
-    "knn_bruteforce",
-    "ann_recall_report",
-    "ann_index_incremental_search",
-    "ann_ivfpq_search_exhaustive",
-    "brand_quantity_price_corr",
-    "copurchase_part_pairs",
-    "streaming_dedup_documents",
-    "streaming_user_totals_tws",
-    "doc_fingerprints",
-    "lang_source_profile",
-    "token_regex_stats",
-    "vocab_top_tokens",
-    "tfidf_top_terms",
-    "label_centroids",
-    "cms_token_frequencies",
-    "bpe_subword_stats",
-    "bigram_fluency_scores",
-    "pack_documents_greedy",
-    "export_jsonl_shards",
-    "jaccard_prefix_pairs",
-    "simhash_near_pairs",
-    "dedup_clusters",
-    "concurrent_sessions",
-    "kmv_distinct_users",
-    "kmv_audience_overlap",
-    "jsonl_events_hourly_stats",
-    "orc_events_hourly_stats",
-    "xml_events_hourly_stats",
-    "neardup_triangle_stats",
-    "incremental_scd2_tiers",
-    "zorder_pruned_revenue",
-    "txn_maintenance_report",
     "media_exact_dedup",
     "media_audio_segments",
-    "pipeline_daily_order_report",
-    "pipeline_daily_category_report",
-    "global_row_ids",
-    "column_stats_report",
-    "corpus_snapshot_diff",
-    "dim_customer",
-)
-
-
-# The round-12 window, kept for the audit trail.
-_R12_WINDOW: tuple[str, ...] = (
-    "txn_scoped_compact_revenue",
-    "txn_widen_column_revenue",
-    "txn_tag_pinned_revenue",
-    "wide_lineitem",
-    "latest_order_per_customer",
-    "rollup_flag_status",
-    "hourly_event_stats",
-    "customer_rank_suite",
-    "bloom_pruned_supplier_revenue",
-    "fuzzy_part_name_pairs",
-    "doc_hierarchy_depths",
-    "k_anonymity_report",
-    "daily_order_report",
-    "daily_category_report",
-    "daily_category_report_bucketed",
-    "hybrid_search_rerank",
-    "scd2_customer_tiers",
-    "scd2_pit_revenue",
-    "embedding_dup_clusters",
-    "knn_int8_quantized",
-    "ann_index_search_exhaustive",
-    "hard_negative_pairs",
-    "ab_test_report",
-    "bootstrap_revenue_ci",
-    "streaming_enriched_event_stats",
-    "streaming_sessionize_events",
-    "streaming_neardup_survivors",
-    "streaming_heavy_hitters",
-    "streaming_distinct_users",
-    "tpch_q1_pricing_summary",
-    "bottomk_sample_per_source",
-    "expectations_orders_report",
-    "scrub_boilerplate_segments",
-    "export_webdataset_shards",
-    "orders_by_year_quarter",
-    "part_name_analysis",
-    "customer_tiers",
-    "unpivot_brand_metrics",
-    "corrupt_record_quarantine",
-    "txn_restore_revenue",
-    "txn_partition_pruned_revenue",
-    "txn_generated_cols_revenue",
-    "txn_replace_where_revenue",
-    "txn_update_revenue",
-    "txn_branch_merge_revenue",
-    "txn_branch_rebase_revenue",
-    "txn_dv_maintenance_revenue",
-    "txn_constraint_gate_revenue",
-    "txn_identity_rows",
-    "media_format_profile",
-)
-
-
-# The round-13 window, kept for the audit trail.
-_R13_WINDOW: tuple[str, ...] = (
-    "txn_widen_nested_revenue",
-    "media_feature_knn",
-    "project_derive_filter",
-    "collect_explode_roundtrip",
-    "global_maxima",
-    "customer_running_revenue",
-    "top10_customers_by_revenue",
-    "customers_without_orders",
-    "customers_with_high_value_orders",
-    "segment_set_ops",
-    "distinct_counts",
-    "pivot_status_by_flag",
-    "orders_above_customer_avg",
-    "quantity_band_join",
-    "cube_flag_status",
-    "grouping_sets_flag_status",
-    "daily_revenue_gapfilled",
-    "daily_revenue_anomalies",
-    "customer_value_quartiles",
-    "rrf_fusion_search",
-    "streaming_txn_source_revenue",
-    "streaming_txn_cdf_revenue",
-    "streaming_materialized_view_revenue",
-    "streaming_txn_cdf_merge_revenue",
-    "streaming_click_purchase_join",
-    "streaming_txn_upsert_revenue",
-    "streaming_expectations_quarantine",
-    "txn_autocompact_revenue",
-    "stratified_sample_documents",
-    "train_split_counts",
-    "pack_sequences",
-    "corpus_curation_counts",
-    "doc_repetition_metrics",
-    "doc_pii_scrub",
-    "asof_purchase_click",
-    "sessionize_events",
-    "signup_click_purchase_funnel",
-    "event_type_map_roundtrip",
-    "event_rollup_multires",
-    "txn_pushdown_revenue",
-    "txn_snapshot_join",
-    "txn_writer_roundtrip_revenue",
-    "txn_detail_summary",
-    "txn_properties_revenue",
-    "txn_convert_revenue",
-    "txn_clone_revenue",
-    "txn_copy_into_revenue",
-    "txn_schema_evolution_revenue",
-    "txn_hidden_partition_revenue",
-    "txn_fsck_report",
-)
-
-
-# The round-10 window, kept for the audit trail (50/50 hash-green in
-# CORRECTNESS_r10.json, including the five round-10 txn gates).
-_R10_WINDOW: tuple[str, ...] = (
-    "txn_hive_convert_revenue",
-    "txn_analyze_stats",
-    "txn_show_partitions",
-    "txn_add_column_default_revenue",
-    "txn_analyze_histogram",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_classes",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_volume_customers",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q21_sole_returned_supplier",
-    "tpch_q22_dormant_customers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_nation_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_type_profit",
-    "tpch_q11_important_stock",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q20_part_promotion_suppliers",
-    "mixture_sample_counts",
-    "context_length_buckets",
-    "benchmark_contamination",
-    "chunk_documents",
-    "boilerplate_chunks",
-    "doc_classifier_scores",
-    "curation_decisions",
-    "export_training_shards",
-    "export_shuffled_shards",
-    "padding_efficiency_report",
-    "cdc_boilerplate_chunks",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "dedup_keep_best",
-    "containment_pairs",
-    "dedup_cluster_stats",
-    "csv_events_hourly_stats",
-    "pagerank_click_graph",
-    "incremental_daily_revenue",
-    "incremental_daily_revenue_merged",
-    "incremental_daily_order_report",
-    "txn_datasource_revenue",
-    "dv_delete_report",
-    "bloom_index_point_lookup",
-    "media_resize_profile",
-    "dp_source_counts",
-    "brand_type_metrics",
-)
-
-
-# The round-9 window, kept for the audit trail (50/50 hash-green in
-# CORRECTNESS_r09.json, including the three r8 red rows fixed via
-# register_txn and the eight round-9 txn gates).
-_R9_WINDOW: tuple[str, ...] = (
-    "txn_writer_roundtrip_revenue",
-    "streaming_txn_sink_revenue",
-    "txn_pushdown_revenue",
-    "txn_detail_summary",
-    "txn_properties_revenue",
-    "txn_convert_revenue",
-    "txn_clone_revenue",
-    "txn_copy_into_revenue",
-    "txn_schema_evolution_revenue",
-    "txn_hidden_partition_revenue",
-    "txn_fsck_report",
-    "txn_reorg_purge_revenue",
-    "txn_manifest_revenue",
-    "txn_merge_sync_revenue",
-    "txn_history_audit",
-    "customer_trailing_7d_revenue",
-    "token_run_lengths",
-    "stratified_sample_documents",
-    "train_split_counts",
-    "pack_sequences",
-    "corpus_curation_counts",
-    "doc_repetition_metrics",
-    "doc_pii_scrub",
-    "asof_purchase_click",
-    "sessionize_events",
-    "signup_click_purchase_funnel",
-    "event_type_map_roundtrip",
-    "event_rollup_multires",
-    "txn_snapshot_join",
-    "media_decode_metadata",
-    "media_frame_samples",
-    "approx_distinct_parts",
-    "events_json_extract",
-    "sql_revenue_by_nation",
-    "signup_cohort_retention",
-    "approx_quantiles_lineitem",
-    "salted_join_brand_quantity",
-    "text_index_search",
-    "embedding_near_dup",
-    "knn_ivf_exhaustive",
-    "knn_lsh_exhaustive",
-    "semantic_dedup_report",
-    "streaming_hourly_event_stats",
-    "doc_stats",
-    "doc_quality_and_lang",
-    "heavy_hitter_tokens",
-    "tpch_q6_forecast_revenue",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_priority_exists",
-)
-
-
-# The round-8 window, kept for the audit trail (47/50 hash-green in
-# CORRECTNESS_r08.json; the 3 red rows are this round's P1 head).
-_R8_WINDOW: tuple[str, ...] = (
-    "export_webdataset_shards",
-    "corrupt_record_quarantine",
-    "txn_restore_revenue",
-    "txn_branch_merge_revenue",
-    "txn_branch_rebase_revenue",
-    "txn_writer_roundtrip_revenue",
-    "txn_dv_maintenance_revenue",
-    "rrf_fusion_search",
-    "streaming_txn_source_revenue",
-    "streaming_txn_sink_revenue",
-    "streaming_txn_cdf_revenue",
-    "streaming_materialized_view_revenue",
-    "streaming_txn_cdf_merge_revenue",
-    "txn_partition_pruned_revenue",
-    "txn_pushdown_revenue",
-    "txn_replace_where_revenue",
-    "txn_update_revenue",
-    "streaming_click_purchase_join",
-    "txn_constraint_gate_revenue",
-    "streaming_txn_upsert_revenue",
-    "txn_generated_cols_revenue",
-    "expectations_orders_report",
-    "streaming_expectations_quarantine",
-    "txn_identity_rows",
-    "txn_autocompact_revenue",
-    "bottomk_sample_per_source",
-    "scrub_boilerplate_segments",
-    "orders_by_year_quarter",
-    "part_name_analysis",
-    "customer_tiers",
-    "unpivot_brand_metrics",
-    "media_format_profile",
-    "media_feature_knn",
-    "project_derive_filter",
-    "collect_explode_roundtrip",
-    "global_maxima",
-    "customer_running_revenue",
-    "top10_customers_by_revenue",
-    "customers_without_orders",
-    "customers_with_high_value_orders",
-    "segment_set_ops",
-    "distinct_counts",
-    "pivot_status_by_flag",
-    "orders_above_customer_avg",
-    "quantity_band_join",
-    "cube_flag_status",
-    "grouping_sets_flag_status",
-    "daily_revenue_gapfilled",
-    "daily_revenue_anomalies",
-    "customer_value_quartiles",
-)
-
-# The round-7 window, kept for the audit trail (every name below got
-# its newest driver row in CORRECTNESS_r07.json — 50/50 hash-green).
-_R7_WINDOW: tuple[str, ...] = (
-    "kmv_distinct_users",
-    "streaming_distinct_users",
-    "kmv_audience_overlap",
-    "jaccard_prefix_pairs",
-    "fuzzy_part_name_pairs",
-    "media_audio_segments",
-    "hard_negative_pairs",
-    "xml_events_hourly_stats",
-    "txn_maintenance_report",
-    "ab_test_report",
-    "bootstrap_revenue_ci",
-    "neardup_triangle_stats",
-    "doc_hierarchy_depths",
-    "k_anonymity_report",
-    "global_row_ids",
-    "column_stats_report",
-    "corpus_snapshot_diff",
-    "ann_index_search_exhaustive",
-    "daily_category_report_bucketed",
-    "dedup_clusters",
-    "embedding_dup_clusters",
-    "jsonl_events_hourly_stats",
-    "knn_int8_quantized",
-    "media_exact_dedup",
-    "orc_events_hourly_stats",
-    "pipeline_daily_category_report",
-    "pipeline_daily_order_report",
-    "streaming_sessionize_events",
-    "export_jsonl_shards",
-    "streaming_enriched_event_stats",
-    "tpch_q1_pricing_summary",
-    "daily_order_report",
-    "daily_category_report",
-    "hourly_event_stats",
-    "simhash_near_pairs",
-    "wide_lineitem",
-    "dim_customer",
-    "hybrid_search_rerank",
-    "zorder_pruned_revenue",
-    "scd2_pit_revenue",
-    "scd2_customer_tiers",
-    "incremental_scd2_tiers",
-    "streaming_heavy_hitters",
-    "streaming_neardup_survivors",
-    "concurrent_sessions",
-    "pack_documents_greedy",
-    "bloom_pruned_supplier_revenue",
-    "customer_rank_suite",
-    "latest_order_per_customer",
-    "rollup_flag_status",
-)
-
-# The round-6 window, kept for the audit trail (every name below got its
-# newest driver row in CORRECTNESS_r06.json — 50/50 hash-green).
-_R6_WINDOW: tuple[str, ...] = (
-    "dv_delete_report",
-    "bloom_index_point_lookup",
-    "export_training_shards",
-    "dedup_keep_best",
-    "cms_token_frequencies",
-    "bpe_subword_stats",
-    "bigram_fluency_scores",
-    "dp_source_counts",
-    "padding_efficiency_report",
-    "join_skew_report",
-    "containment_pairs",
-    "winsorized_revenue_by_priority",
-    "dedup_cluster_stats",
-    "cdc_boilerplate_chunks",
-    "brand_quantity_price_corr",
-    "copurchase_part_pairs",
-    "knn_bruteforce",
-    "ann_index_incremental_search",
-    "doc_classifier_scores",
-    "export_shuffled_shards",
-    "daily_category_report_approx",
-    "curation_decisions",
-    "ann_recall_report",
-    "ann_ivfpq_search_exhaustive",
-    "benchmark_contamination",
-    "bm25_keyword_search",
-    "boilerplate_chunks",
-    "brand_type_metrics",
-    "chunk_documents",
-    "context_length_buckets",
-    "csv_events_hourly_stats",
-    "dedup_exact",
-    "doc_fingerprints",
-    "incremental_daily_order_report",
-    "incremental_daily_revenue",
-    "incremental_daily_revenue_merged",
-    "label_centroids",
-    "lang_source_profile",
-    "media_resize_profile",
-    "minhash_lsh_pairs",
-    "mixture_sample_counts",
-    "ngram_jaccard_pairs",
-    "pagerank_click_graph",
-    "salted_distinct_customers_by_status",
-    "streaming_dedup_documents",
-    "streaming_user_totals_tws",
-    "tfidf_top_terms",
-    "token_regex_stats",
-    "txn_datasource_revenue",
-    "vocab_top_tokens",
-)
-
-
-# The round-5 window, kept for the audit trail (every name below got its
-# newest driver row in CORRECTNESS_r05.json — 50/50 hash-green).
-_R5_WINDOW: tuple[str, ...] = (
-    "heavy_hitter_tokens",
-    "media_frame_samples",
-    "salted_join_brand_quantity",
-    "text_index_search",
-    "semantic_dedup_report",
-    "txn_snapshot_join",
-    "approx_distinct_parts",
-    "approx_quantiles_lineitem",
-    "asof_purchase_click",
-    "corpus_curation_counts",
-    "doc_pii_scrub",
-    "doc_quality_and_lang",
-    "doc_repetition_metrics",
-    "doc_stats",
-    "embedding_near_dup",
-    "event_rollup_multires",
-    "event_type_map_roundtrip",
-    "events_json_extract",
-    "knn_ivf_exhaustive",
-    "knn_lsh_exhaustive",
-    "media_decode_metadata",
-    "pack_sequences",
-    "sessionize_events",
-    "signup_click_purchase_funnel",
-    "signup_cohort_retention",
-    "sql_revenue_by_nation",
-    "stratified_sample_documents",
-    "streaming_hourly_event_stats",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_priority_exists",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_nation_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_type_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_classes",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_volume_customers",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_part_promotion_suppliers",
-    "tpch_q21_sole_returned_supplier",
-    "tpch_q22_dormant_customers",
-    "train_split_counts",
-)
-
-# The round-4 window, kept for the audit trail (every name below got its
-# newest driver row in CORRECTNESS_r04.json).
-_R4_WINDOW: tuple[str, ...] = (
-    # --- Canaries: stable, previously-green, exercise the shared loader,
-    # the flagship report pipeline, events, and the dedup family.
-    "tpch_q1_pricing_summary",
-    "daily_order_report",
-    "daily_category_report",
-    "hourly_event_stats",
-    "simhash_near_pairs",
-    # --- The 28 queries whose newest green driver row is round 1
-    # (VERDICT r3 "What's wrong" #1) — shared loader changed r2 + r3.
-    "collect_explode_roundtrip",
-    "cube_flag_status",
-    "customer_rank_suite",
-    "customer_running_revenue",
-    "customer_tiers",
-    "customer_trailing_7d_revenue",
-    "customer_value_quartiles",
-    "customers_with_high_value_orders",
-    "customers_without_orders",
-    "daily_revenue_anomalies",
-    "daily_revenue_gapfilled",
-    "dim_customer",
-    "distinct_counts",
-    "global_maxima",
-    "grouping_sets_flag_status",
-    "latest_order_per_customer",
-    "media_format_profile",
-    "orders_above_customer_avg",
-    "orders_by_year_quarter",
-    "part_name_analysis",
-    "pivot_status_by_flag",
-    "project_derive_filter",
-    "quantity_band_join",
-    "rollup_flag_status",
-    "segment_set_ops",
-    "top10_customers_by_revenue",
-    "unpivot_brand_metrics",
-    "wide_lineitem",
-    # --- Round-4 additions / newly-oracled surfaces.
-    "media_feature_knn",
-    "ann_recall_report",
-    "daily_category_report_approx",
-    "streaming_neardup_survivors",
-    # knn_ivf is a rows-only check whose recall is hash-verified
-    # in-window by ann_recall_report; its slot goes to the UDTF surface.
-    "token_run_lengths",
-    "pack_documents_greedy",
-    # --- Fill the window to exactly 50 with r2-evidence queries picked
-    # one-per-family (instead of letting registration order waste slots
-    # on queries already green in r3): asof join, sessionization, event
-    # rollups, media decode, quality metrics, ANN baselines, SQL views,
-    # approx quantiles, streaming.
-    # sessionize_events' full computation runs inside concurrent_sessions
-    # (its session table is the join input), so the range-join surface
-    # covers both in one slot; likewise scd2_pit_revenue's point-in-time
-    # lookup IS the asof_join operator, covering asof_purchase_click's
-    # path.
-    "concurrent_sessions",
-    # event_rollup_multires' grouping-sets machinery is in-window via
-    # rollup/cube/grouping_sets_flag_status; the slot goes to the
-    # cross-batch sketch accumulator.
-    "streaming_heavy_hitters",
-    # doc_pii_scrub keeps its r2 hash-green row + byte-exact pytest; the
-    # slot goes to the z-order data-skipping correctness surface.
-    "zorder_pruned_revenue",
-    # streaming evidence stays fresh via streaming_neardup_survivors +
-    # streaming_heavy_hitters; the hourly twin's slot goes to the
-    # incremental SCD2 surface.
-    "incremental_scd2_tiers",
-    "scd2_customer_tiers",
-    "scd2_pit_revenue",
-    "bottomk_sample_per_source",
-    # --- This session's new surfaces (no prior driver evidence — they
-    # displace fills whose code paths are already covered inside the
-    # window: knn_bruteforce by the _BF_TOP10_ORACLE twins +
-    # ann_recall_report, sql_revenue_by_nation's view path by the
-    # pipeline reports, approx_quantiles_lineitem's percentile_approx by
-    # daily_category_report_approx).
-    "bloom_pruned_supplier_revenue",
-    "scrub_boilerplate_segments",
-    "semantic_dedup_report",
-    # embedding_near_dup's cosine_pairs_blocked path is exercised
-    # in-window by semantic_dedup_report's exact side, and
-    # heavy_hitter_tokens' oracle + sketch/recount helpers run
-    # identically inside streaming_heavy_hitters; the slot goes to the
-    # persisted inverted-index surface — via the hybrid two-stage query,
-    # which CONTAINS text_index_search's computation (same index, wider
-    # stage-1 cut) plus the dense re-rank composition.
-    "hybrid_search_rerank",
 )
 
 

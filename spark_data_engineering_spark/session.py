@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half of physical memory,
+    capped at 24g: a fixed 24g heap on a smaller host lets a second
+    Spark process beside this one get the machine OOM-killed."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "spark_data_engineering_spark",
     master: str | None = None,
@@ -48,7 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from spark_data_engineering_spark.cacheutil import scratch_dir
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -106,17 +109,80 @@ def sessionize_stream(events: DataFrame, gap: str = "30 minutes", watermark: str
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> None:
-    """Drive a finite file-source stream to completion synchronously
-    (availableNow) into an in-memory table for assertions/smoke."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+# The state shuffle width of the stateful gate queries (see ``drain``).
+# Gates whose foreachBatch function or sink runs batch plans keep the
+# session width: those plans run on the stream's cloned session, which
+# would carry this width into every shuffle they make.
+STATE_CONFS = {"spark.sql.shuffle.partitions": "8"}
+
+
+def drain(
+    writer: DataStreamWriter,
+    *,
+    checkpoint: str | None = None,
+    confs: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Run a configured stream writer to the end of its available input
+    and return the stopped query: the one stream lifecycle every gate
+    query shares.
+
+    ``confs`` are session confs set only around ``start()`` and then
+    restored (or unset again if they were absent). Start-time confs
+    such as the state shuffle width or the state-store provider are
+    baked into the checkpoint at FIRST start, so the scope has to wrap
+    ``start()`` and nothing else; the batches themselves run on the
+    stream's cloned session and keep what it saw at start. Stateful
+    operators keep one state store per shuffle partition and commit a
+    delta file per partition per micro-batch, so at gate volume a wide
+    session default is mostly store-commit overhead (measured ~2x on the
+    interval join and the transformWithState query); production sizes
+    it by key rate x state size.
+
+    The checkpoint is a fresh ``scratch_dir("stream_ckpt")`` unless the
+    caller passes one (to replay a checkpoint, say). The trigger is
+    ``availableNow``: everything present at start is processed, then
+    the query ends. A source without native ``availableNow`` support
+    (the txn format's Python source) runs as ONE micro-batch to the
+    offset it reports at start, so a paced source (``maxFilesPerTrigger``
+    on a txn snapshot) would stop after its first chunk. ``stop()`` runs
+    in a ``finally``, so a failing query leaves nothing active and its
+    error propagates."""
+    spark = writer._spark
+    confs = confs or {}
+    prev = spark.conf.getAll
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint or scratch_dir("stream_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        for k in confs:
+            if k in prev:
+                spark.conf.set(k, prev[k])
+            else:
+                spark.conf.unset(k)
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return q
+
+
+def run_to_memory(
+    stream_df: DataFrame,
+    name: str,
+    mode: str = "append",
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
+    """``drain`` into the in-memory table ``name`` and return it."""
+    drain(
+        stream_df.writeStream.outputMode(mode).format("memory").queryName(name),
+        confs=confs,
     )
-    q.awaitTermination()
+    return stream_df.sparkSession.table(name)
 
 
 def user_spend_tracker_stream(events: DataFrame, alert_threshold: float = 1000.0) -> DataFrame:

@@ -53,6 +53,7 @@ from spark_data_engineering_spark.operators.dedup import (
     verify_candidate_pairs,
 )
 from spark_data_engineering_spark.sources.txn import TxnTable
+from spark_data_engineering_spark.streaming.events import drain
 from spark_data_engineering_spark.materialize import materialize
 
 
@@ -195,13 +196,7 @@ class NearDupIngest:
         )
         self.bands_table.append_idempotent(kept_bands, "neardup:bands", epoch_id)
 
-    def run(self, stream: DataFrame, checkpoint_dir: str) -> None:
+    def run(self, stream: DataFrame, checkpoint_dir: str | None = None) -> None:
         """Drive a document stream through the ingest to completion
-        (availableNow)."""
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        (``events.drain``; a fresh checkpoint unless one is given)."""
+        drain(stream.writeStream.foreachBatch(self.process_batch), checkpoint=checkpoint_dir)

@@ -18,11 +18,6 @@
    marked data file was later compacted away and vacuumed crashed with
    a raw missing-file error; the planner now refuses with a
    descriptive 'version no longer readable, data vacuumed' message.
-4. (low) the txn-stream gate queries wrote per-run uuid checkpoint dirs
-   under ``/tmp/spark_de_txnstream_ckpt/`` without ever sweeping the
-   root — unbounded leak across gate runs. Every per-call directory
-   (that checkpoint root and the others below) now comes from
-   ``cacheutil.scratch_dir``, which sweeps stale entries first.
 """
 
 from __future__ import annotations
@@ -144,42 +139,3 @@ def test_cdf_refuses_vacuumed_delete_target(spark, tmp_path):
     finally:
         q.stop()
 
-
-# every root a query makes a fresh per-call directory under
-_SCRATCH_ROOTS = (
-    "txnstream_ckpt",
-    "neardup_ckpt",
-    "mgstream_ckpt",
-    "kmvstream_ckpt",
-    "txnsnap",
-    "dv",
-    "export",
-    "streamsink",
-    "mview",
-    "deadletter",
-)
-
-
-@pytest.mark.parametrize("namespace", _SCRATCH_ROOTS)
-def test_txnstream_ckpt_root_is_swept(namespace):
-    """Finding 4: stale per-run dirs under a shared scratch root are
-    collected the next time a query makes one — and the queries make
-    them only through ``scratch_dir``."""
-    from pathlib import Path
-
-    from spark_data_engineering_spark import cacheutil
-
-    qdir = Path(cacheutil.__file__).parent / "queries"
-    used = "".join(p.read_text() for p in qdir.glob("*.py"))
-    assert f'scratch_dir("{namespace}"' in used
-    root = cacheutil.cache_root(namespace)
-    stale = os.path.join(root, "stale-advr7")
-    os.makedirs(stale, exist_ok=True)
-    old = time.time() - 7200
-    os.utime(stale, (old, old))
-    fresh = cacheutil.scratch_dir(namespace)
-    try:
-        assert not os.path.isdir(stale)
-        assert os.path.dirname(fresh) == root and os.listdir(fresh) == []
-    finally:
-        os.rmdir(fresh)

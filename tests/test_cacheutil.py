@@ -4,6 +4,7 @@ pair that keeps entries in use alive."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import shutil
@@ -263,6 +264,78 @@ def test_queries_hold_no_cache_protocol():
         if banned.search(line)
     ]
     assert hits == []
+
+
+# the sink-builder closures that await the StreamingQuery a streaming
+# sink builder (stream_upsert_to_txn, stream_with_expectations,
+# stream_to_txn_table) returns
+_SINK_BUILDS = (
+    "streaming_txn_upsert_revenue",
+    "streaming_expectations_quarantine",
+    "txn_autocompact_revenue",
+)
+
+
+def test_queries_hold_no_stream_lifecycle():
+    """``streaming.events.drain`` is the only stream lifecycle: no
+    streaming gate starts, awaits or stops a query, or sets a session
+    conf, by hand. The sink-builder closures keep their await."""
+    pkg = Path(cacheutil.__file__).parent
+    banned = re.compile(
+        r"awaitTermination\(|processAllAvailable\(|\.start\(|shuffle\.partitions"
+        r"|conf\.set\(|conf\.unset\("
+    )
+    hits = []
+    for path in (pkg / "queries" / "streaming_q.py", pkg / "streaming" / "neardup.py"):
+        src = path.read_text()
+        exempt = {
+            n
+            for gate in ast.walk(ast.parse(src))
+            if isinstance(gate, ast.FunctionDef) and gate.name in _SINK_BUILDS
+            for build in gate.body
+            if isinstance(build, ast.FunctionDef) and build.name == "build"
+            for n in range(build.lineno, build.end_lineno + 1)
+        }
+        hits += [
+            f"{path.name}:{n}"
+            for n, line in enumerate(src.splitlines(), 1)
+            if banned.search(line) and n not in exempt
+        ]
+    assert hits == []
+
+
+# every root a query or a stream drain makes a fresh per-call directory under
+_SCRATCH_ROOTS = (
+    "stream_ckpt",
+    "txnsnap",
+    "dv",
+    "export",
+    "streamsink",
+    "mview",
+    "deadletter",
+)
+
+
+@pytest.mark.parametrize("namespace", _SCRATCH_ROOTS)
+def test_scratch_root_is_swept(namespace):
+    """Stale per-run dirs under a shared scratch root are collected the
+    next time one is made — and the package makes them only through
+    ``scratch_dir``."""
+    pkg = Path(cacheutil.__file__).parent
+    used = "".join(
+        p.read_text() for d in ("queries", "streaming") for p in (pkg / d).glob("*.py")
+    )
+    assert f'scratch_dir("{namespace}"' in used
+    root = cacheutil.cache_root(namespace)
+    stale = os.path.join(root, "stale-swept")
+    os.makedirs(stale, exist_ok=True)
+    _stale(stale)
+    fresh = cacheutil.scratch_dir(namespace)
+    try:
+        assert not os.path.isdir(stale)
+        assert os.path.dirname(fresh) == root and os.listdir(fresh) == []
+    finally:
+        os.rmdir(fresh)
 
 
 def test_build_once_keeps_an_old_hit(tmp_path):

@@ -304,3 +304,97 @@ def test_stream_static_enrichment_exactly_once_replay(spark, stream_dir, sf_dir,
     delivered.clear()
     run()  # same checkpoint: the replay must deliver zero rows
     assert sum(delivered) == 0
+
+
+# ---- drain: the one stream lifecycle ------------------------------------
+
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+
+def test_drain_runs_file_stream_over_batches_to_batch_answer(spark, stream_dir):
+    """A file stream drained in several micro-batches ends at the batch
+    answer, with the start-time state width in force."""
+    agg = SE.read_event_stream(spark, stream_dir).groupBy("event_type").count()
+    q = SE.drain(
+        agg.writeStream.outputMode("complete").format("memory").queryName("drain_multi"),
+        confs={"spark.sql.shuffle.partitions": "3"},
+    )
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) >= 2
+    assert {p.stateOperators[0].numShufflePartitions for p in batches} == {3}
+    got = {r.event_type: r["count"] for r in spark.table("drain_multi").collect()}
+    want = {
+        r.event_type: r["count"]
+        for r in spark.read.parquet(stream_dir).groupBy("event_type").count().collect()
+    }
+    assert got == want and got
+    assert not q.isActive and spark.streams.active == []
+
+
+def test_drain_failed_batch_propagates_and_leaves_nothing_active(spark, stream_dir):
+    def fail(batch_df, epoch_id):
+        raise ValueError("batch function failed")
+
+    writer = SE.read_event_stream(spark, stream_dir).writeStream.foreachBatch(fail)
+    with pytest.raises(Exception, match="batch function failed"):
+        SE.drain(writer)
+    assert spark.streams.active == []
+
+
+@pytest.fixture
+def provider_conf(spark):
+    """Leave the state-store provider conf as the test found it."""
+    prev = spark.conf.getAll.get(_PROVIDER)
+    yield
+    if prev is None:
+        spark.conf.unset(_PROVIDER)
+    else:
+        spark.conf.set(_PROVIDER, prev)
+
+
+def _plain_writer(spark, stream_dir, name):
+    return (
+        SE.read_event_stream(spark, stream_dir)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+    )
+
+
+def test_drain_restores_a_preset_conf(spark, stream_dir, provider_conf):
+    spark.conf.set(_PROVIDER, _HDFS)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    SE.drain(
+        _plain_writer(spark, stream_dir, "drain_preset"),
+        confs={_PROVIDER: _ROCKSDB, "spark.sql.shuffle.partitions": "7"},
+    )
+    assert spark.conf.get(_PROVIDER) == _HDFS
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+def test_drain_unsets_a_conf_that_was_absent(spark, stream_dir, provider_conf):
+    spark.conf.unset(_PROVIDER)
+    SE.drain(_plain_writer(spark, stream_dir, "drain_absent"), confs={_PROVIDER: _ROCKSDB})
+    assert _PROVIDER not in spark.conf.getAll
+
+
+def test_drain_conf_scope_holds_when_start_raises(spark, stream_dir, provider_conf):
+    """Complete mode over a stream with no aggregation fails in
+    ``start()``: the preset conf is restored, the absent one unset, the
+    error propagates and no query is left active."""
+    spark.conf.set(_PROVIDER, _HDFS)
+    absent = "spark.sql.streaming.noDataMicroBatches.enabled"
+    assert absent not in spark.conf.getAll
+    writer = (
+        SE.read_event_stream(spark, stream_dir)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("drain_bad_start")
+    )
+    with pytest.raises(Exception, match="(?i)complete"):
+        SE.drain(writer, confs={_PROVIDER: _ROCKSDB, absent: "false"})
+    assert spark.conf.get(_PROVIDER) == _HDFS
+    assert absent not in spark.conf.getAll
+    assert spark.streams.active == []

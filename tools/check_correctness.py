@@ -19,7 +19,10 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
-from spark_data_engineering_spark.session import get_spark  # noqa: E402
+from spark_data_engineering_spark.session import (  # noqa: E402
+    default_driver_memory,
+    get_spark,
+)
 from spark_data_engineering_spark.sources import TABLES  # noqa: E402
 
 
@@ -65,7 +68,7 @@ def plain_spark():
     return (
         SparkSession.builder.appName("correctness-check-plain")
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

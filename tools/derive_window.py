@@ -20,10 +20,11 @@ registry.CHECK_PRIORITY, applied by this tool):
 Usage:  python tools/derive_window.py          # print the derived window
         python tools/derive_window.py --check  # diff vs CHECK_PRIORITY,
                                                # exit 1 on mismatch
+        python tools/derive_window.py --write  # rewrite CHECK_PRIORITY
+                                               # in registry.py
 
 Run --check after adding queries or when a new CORRECTNESS_rN.json
-lands; update CHECK_PRIORITY (and archive the old window) when it
-drifts.
+lands; run --write when it drifts, then --check exits clean.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REGISTRY = os.path.join(REPO, "spark_data_engineering_spark", "registry.py")
 sys.path.insert(0, REPO)
 
 WINDOW = 50
@@ -109,8 +111,26 @@ def derive() -> tuple[list[str], dict[str, str]]:
     return window, rationales
 
 
+def write(window: list[str]) -> None:
+    """Rewrite the body of ``registry.CHECK_PRIORITY`` as ``window``."""
+    with open(REGISTRY) as fh:
+        src = fh.read()
+    head = "CHECK_PRIORITY: tuple[str, ...] = (\n"
+    start = src.index(head) + len(head)
+    end = src.index("\n)\n", start)
+    body = "    # Derived by tools/derive_window.py --write.\n" + "\n".join(
+        f'    "{n}",' for n in window
+    )
+    with open(REGISTRY, "w") as fh:
+        fh.write(src[:start] + body + src[end:])
+
+
 def main() -> int:
     window, rationales = derive()
+    if "--write" in sys.argv:
+        write(window)
+        print(f"CHECK_PRIORITY rewritten ({len(window)} names).")
+        return 0
     if "--staleness" in sys.argv:
         # one-line evidence-staleness report (VERDICT r9 task 8): per-
         # round cohort sizes over every oracled query, the oldest

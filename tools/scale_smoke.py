@@ -46,24 +46,14 @@ def _warm_stream_worker(spark) -> None:
     from spark_data_engineering_spark.cacheutil import scratch_dir
     from spark_data_engineering_spark.sources.txn import TxnTable
     from spark_data_engineering_spark.sources.txn_datasource import register_txn
+    from spark_data_engineering_spark.streaming.events import run_to_memory
 
     root = scratch_dir("smokewarm")
     try:
         register_txn(spark)
         t = TxnTable(root, "warm")
         t.append(spark.range(4).withColumn("v", F.col("id")).coalesce(1))
-        q = (
-            spark.readStream.format("txn")
-            .load(t.table_dir)
-            .writeStream.format("memory")
-            .queryName("smoke_warm_stream")
-            .option("checkpointLocation", f"{root}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        run_to_memory(spark.readStream.format("txn").load(t.table_dir), "smoke_warm_stream")
     except Exception as e:  # pragma: no cover - warm-up must never gate
         print(f"# stream warm-up skipped: {e}", file=sys.stderr)
     finally:
