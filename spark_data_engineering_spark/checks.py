@@ -8,11 +8,23 @@ fact_orders.order_id unique, daily_order_metrics.order_date unique +
 also *intended* wide-table uniqueness checks that were never wired
 (§2.7 quirk) — those are implemented here as first-class checks.
 
-Execution model: every check contributes aggregate expressions to ONE
-combined ``df.agg(...)`` job per node (the runner collects them), so a
-node with four checks costs a single data pass — the reference ran a
-separate Great Expectations Spark job per suite. Each check then
-interprets its aggregate row slice into ``None`` (pass) or a message.
+Execution model, for a node about to be published (``plans.dag.Runner``):
+
+- uniqueness the optimizer has already derived costs nothing:
+  ``proven_unique`` reads the plan's ``distinctKeys`` (a ``groupBy`` or
+  ``dropDuplicates`` output proves its own keys);
+- the other aggregate checks (``bounds``, ``not_null``, ``row_count_min``,
+  ``accepted_values``) ride the write itself as ``observe()`` metrics
+  (``observe_checks``), so they cost no data pass of their own;
+- what cannot be folded into the write (an unproved ``unique``, whose
+  ``count_distinct`` ``observe()`` refuses, and ``standalone`` checks
+  such as ``foreign_key``) runs before it through ``run_checks``: every
+  foldable aggregate in ONE ``df.agg(...)`` job, plus one job per
+  standalone check. The reference ran a separate Great Expectations
+  Spark job per suite.
+
+Each check interprets its aggregate row slice into ``None`` (pass) or a
+message.
 """
 
 from __future__ import annotations
@@ -41,6 +53,9 @@ class Check:
     # set instead of build/interpret when the check needs its own plan
     # (e.g. an anti-join) and can't fold into the shared aggregate
     standalone: "Callable[[DataFrame], str | None] | None" = None
+    # set by unique(): the columns whose uniqueness the check asserts, so
+    # a plan that already proves them (proven_unique) skips the check
+    key: tuple[str, ...] = ()
 
     def __call__(self, df: DataFrame) -> "str | None":
         """Single-check evaluation (one job) — the runner prefers batching
@@ -49,6 +64,17 @@ class Check:
             return self.standalone(df)
         row = df.agg(*self.build("c0")).collect()[0]
         return self.interpret(row, "c0")
+
+
+def _aggregates(checks) -> list[Column]:
+    aggs: list[Column] = []
+    for i, c in enumerate(checks):
+        aggs.extend(c.build(f"c{i}"))
+    return aggs
+
+
+def _interpret(row, checks) -> list[str]:
+    return [msg for i, c in enumerate(checks) if (msg := c.interpret(row, f"c{i}")) is not None]
 
 
 def run_checks(df: DataFrame, checks: tuple[Check, ...]) -> list[str]:
@@ -62,14 +88,67 @@ def run_checks(df: DataFrame, checks: tuple[Check, ...]) -> list[str]:
         if c.standalone is not None and (msg := c.standalone(df)) is not None:
             failures.append(msg)
     if foldable:
-        aggs: list[Column] = []
-        for i, c in enumerate(foldable):
-            aggs.extend(c.build(f"c{i}"))
-        row = df.agg(*aggs).collect()[0]
-        failures.extend(
-            msg for i, c in enumerate(foldable) if (msg := c.interpret(row, f"c{i}")) is not None
-        )
+        row = df.agg(*_aggregates(foldable)).collect()[0]
+        failures.extend(_interpret(row, foldable))
     return failures
+
+
+def _scala_iter(coll):
+    it = coll.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def proven_unique(df: DataFrame, cols: tuple[str, ...]) -> bool:
+    """True when the optimized plan already guarantees that ``cols`` is
+    a key of ``df``: one of its ``distinctKeys`` is made only of output
+    columns named in ``cols`` (an empty one means at most one row).
+    Catalyst derives these from ``groupBy``, ``distinct``/
+    ``dropDuplicates`` and key-preserving joins. Its distinct keys are
+    null-safe (NULLs group together), so a proved key also has at most
+    one NULL, which is what ``unique`` asserts. Metadata only: no job
+    runs."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    output = plan.outputSet()
+    return any(
+        all(
+            e.getClass().getSimpleName() == "AttributeReference"
+            and output.contains(e)
+            and e.name() in cols
+            for e in _scala_iter(key)
+        )
+        for key in _scala_iter(plan.distinctKeys())
+    )
+
+
+def split_checks(
+    df: DataFrame, checks: tuple[Check, ...]
+) -> tuple[tuple[Check, ...], tuple[Check, ...]]:
+    """(observable, pre_write) for a write of ``df``: ``unique`` checks
+    the plan proves are dropped; an unproved ``unique`` (``count_distinct``
+    cannot be observed) and every ``standalone`` check must run before
+    the write; every other check can ride the write as an observation."""
+    observable: list[Check] = []
+    pre_write: list[Check] = []
+    for c in checks:
+        if c.key and proven_unique(df, c.key):
+            continue
+        (pre_write if c.key or c.standalone is not None else observable).append(c)
+    return tuple(observable), tuple(pre_write)
+
+
+def observe_checks(
+    df: DataFrame, checks: tuple[Check, ...]
+) -> tuple[DataFrame, Callable[[], list[str]]]:
+    """Attach every check's aggregates to ``df`` as ONE ``Observation``.
+    Returns the observed frame and a function that, after the frame's
+    first action (the write), interprets the observed row into failure
+    messages, like ``run_checks`` over the same checks."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    observed = df.observe(obs, *_aggregates(checks))
+    return observed, lambda: _interpret(obs.get, checks)
 
 
 def unique(*cols: str) -> Check:
@@ -104,7 +183,7 @@ def unique(*cols: str) -> Check:
             return f"{nulls} NULL keys on {cols}"
         return None
 
-    return Check(name=f"unique{cols}", build=build, interpret=interpret)
+    return Check(name=f"unique{cols}", build=build, interpret=interpret, key=cols)
 
 
 def not_null(*cols: str) -> Check:
@@ -188,27 +267,3 @@ def foreign_key(df_col: str, dim, dim_col: str) -> Check:
         name=f"foreign_key({df_col})", build=None, interpret=None, standalone=standalone
     )
 
-
-def observed(df: DataFrame, name: str, *cols: str):
-    """Zero-extra-scan quality metrics: attach an ``Observation`` so row
-    count and per-column null counts are collected DURING whatever action
-    the caller runs next (the write itself), instead of the separate
-    aggregate job ``run_checks`` costs. At 100 TB that second scan is the
-    single most expensive part of validation — observe() rides the
-    existing pass for free (it taps rows as they flow through the plan).
-
-    Returns (observed_df, observation). After ANY action on observed_df,
-    ``observation.get`` yields ``{'n_rows': ..., 'nulls_<col>': ...}``.
-    Observation metrics must be aggregates over the observed plan and
-    cannot force extra jobs — exactly the right constraint for metrics
-    that must never slow the pipeline down.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        metrics.append(
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"nulls_{c}")
-        )
-    return df.observe(obs, *metrics), obs

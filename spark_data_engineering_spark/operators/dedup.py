@@ -55,9 +55,10 @@ def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("_tokens", F.split(F.col(text_col), " "))
 
 
-# Pre-explode bytes of raw text per spread partition. The posexplode
-# multiplies rows ~tokens-per-doc×, so 64 KiB of input text is tens of
-# MB of token rows per task — a sensible task size at any scale. The
+# Pre-explode input bytes per spread partition, as the optimizer
+# estimates them (for a parquet scan: compressed file bytes, see
+# _spread_partitions). The posexplode multiplies rows ~tokens-per-doc×,
+# so 64 KiB of input is tens of MB of token rows per task — a sensible task size at any scale. The
 # r13 fixed defaultParallelism spread flooded the checkpointed index's
 # downstream consumer stages with near-empty partitions on small
 # corpora (measured sf0.1 sweep, tools/ab_shingle.py: k=8 beats k=32 on
@@ -71,11 +72,14 @@ _SPREAD_TARGET_BYTES = int(
 
 def _spread_partitions(df: DataFrame) -> int:
     """Partition count for the pre-explode spread in ``shingle_index``:
-    one partition per ``_SPREAD_TARGET_BYTES`` of (estimated, pre-
-    explode) input, clamped to cluster parallelism — big corpora still
-    saturate the cluster; tiny ones stop paying 32-task scheduling in
-    every downstream stage of the materialized index. Uses the
-    optimizer's size estimate (no job)."""
+    one partition per ``_SPREAD_TARGET_BYTES`` of estimated pre-explode
+    input, clamped to cluster parallelism — big corpora still saturate
+    the cluster; tiny ones stop paying 32-task scheduling in every
+    downstream stage of the materialized index. Uses the optimizer's
+    size estimate (no job). For a parquet scan that estimate is the
+    files' on-disk bytes, i.e. compressed parquet, not raw text, so
+    below the parallelism clamp a corpus gets fewer partitions than its
+    raw text size would give, by about the compression ratio."""
     sc = df.sparkSession.sparkContext
     try:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))

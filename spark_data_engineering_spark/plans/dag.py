@@ -117,10 +117,14 @@ class Runner:
     ``validate`` modes:
     - ``"materialized"`` (default): checks gate writes only — the
       reference's semantics (validate → write, base_table.py:222-240).
-      With no store, nothing materializes, so the pipeline stays one
-      fused lazy plan with zero validation jobs.
-    - ``"all"``: validate every node eagerly (one combined agg job per
-      node) — integration-test mode.
+      A failing batch is never visible: ``_publish`` proves what the plan
+      can, runs what cannot ride the write before it, observes the rest
+      during the write and lets the store publish only after the audit
+      passes. With no store, nothing materializes, so the pipeline stays
+      one fused lazy plan with zero validation jobs.
+    - ``"all"``: also validate every unmaterialized node eagerly (one
+      combined agg job per node that has checks the plan does not
+      prove) — integration-test mode.
     - ``"none"``: skip checks.
     """
 
@@ -149,19 +153,20 @@ class Runner:
             upstream = {dep: self._cache[dep] for dep in node.deps}
             df = node.transform(upstream)
             will_write = node.materialize and self.store is not None
-            if self.validate == "all" or (self.validate == "materialized" and will_write):
-                self._validate(node, df)
+            gate = self.validate == "all" or (self.validate == "materialized" and will_write)
             if will_write:
-                self.store.write(name, df, self.batch_ts, partition_keys=node.partition_keys)
-                df = self.store.read_latest(self.spark, name)
-            elif self.persist_shared and fanout.get(name, 0) > 1:
-                # cache-vs-recompute: a shared subtree computes once per
-                # downstream ACTION under pure laziness; persisting trades
-                # executor memory for that recomputation (Delta-less
-                # equivalent of the reference's materialize-every-layer,
-                # applied only where fan-out makes it pay)
-                df = df.persist()
-                self._persisted.append(df)
+                df = self._publish(node, df, gate)
+            else:
+                if gate:
+                    self._validate(node, df)
+                if self.persist_shared and fanout.get(name, 0) > 1:
+                    # cache-vs-recompute: a shared subtree computes once per
+                    # downstream ACTION under pure laziness; persisting trades
+                    # executor memory for that recomputation (Delta-less
+                    # equivalent of the reference's materialize-every-layer,
+                    # applied only where fan-out makes it pay)
+                    df = df.persist()
+                    self._persisted.append(df)
             self._cache[name] = df
         return self._cache[target]
 
@@ -180,13 +185,43 @@ class Runner:
             storage_path=(self.store.path(target) if self.store is not None and node.materialize else None),
         )
 
-    def _validate(self, node: Node, df: DataFrame) -> None:
-        """Run declared data-quality checks in ONE aggregate job; any
-        failure blocks the write (reference ``validate()`` gate,
+    def _publish(self, node: Node, df: DataFrame, gate: bool) -> DataFrame:
+        """Write → audit → publish one materialized node and return its
+        published batch, read back with the schema it was written with
+        (no inference job). With ``gate``, uniqueness the plan proves is
+        skipped, checks that cannot ride the write run first, and the rest
+        are observed during the write; the store calls ``audit`` after the
+        data is durable and before it is visible, so a failing batch is
+        never published."""
+        from spark_data_engineering_spark.checks import observe_checks, split_checks
+
+        audit = None
+        if gate:
+            observable, pre_write = split_checks(df, node.checks)
+            self._validate(node, df, pre_write)
+            if observable:
+                df, failures = observe_checks(df, observable)
+                audit = lambda: self._raise_on(node, failures())  # noqa: E731
+        self.store.write(
+            node.name, df, self.batch_ts, partition_keys=node.partition_keys, audit=audit
+        )
+        return self.store.read_latest(self.spark, node.name, schema=df.schema)
+
+    def _validate(self, node: Node, df: DataFrame, checks: tuple[Check, ...] | None = None) -> None:
+        """Run ``checks`` (default: the node's checks the plan does not
+        prove) as one aggregate job plus one job per standalone check;
+        any failure raises (reference ``validate()`` gate,
         base_table.py:140-196 — Great Expectations replaced by plain
         DataFrame assertions)."""
-        from spark_data_engineering_spark.checks import run_checks
+        from spark_data_engineering_spark.checks import run_checks, split_checks
 
-        failures = run_checks(df, node.checks)
+        if checks is None:
+            observable, pre_write = split_checks(df, node.checks)
+            checks = observable + pre_write
+        if checks:
+            self._raise_on(node, run_checks(df, checks))
+
+    @staticmethod
+    def _raise_on(node: Node, failures: list[str]) -> None:
         if failures:
             raise CheckError(f"node {node.name!r}: " + "; ".join(failures))

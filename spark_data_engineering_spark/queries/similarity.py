@@ -286,11 +286,9 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the report's 6.7 s wall, vs 2.0 s for the final action. The
     # branches are independent, so they build in a small thread pool
     # (Spark schedules concurrent driver jobs FIFO; results are the same
-    # frames in the same dict order). Shared invariants computed once:
-    # the corpus count that sizes the LSH planes (both LSH branches used
-    # to run their own count) and the 32-cell centroid training (the
-    # per-call ivf branch trains the identical array the exhaustive
-    # twin's operator would — same corpus, same sample contract).
+    # frames in the same dict order). One shared invariant is computed
+    # once: the corpus count that sizes the LSH planes (both LSH branches
+    # used to run their own count).
     from concurrent.futures import ThreadPoolExecutor
 
     n_corpus = emb.count()

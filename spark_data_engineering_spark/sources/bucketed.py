@@ -25,8 +25,13 @@ def _clear_stale_location(spark: SparkSession, table: str) -> None:
     orphaned location, so clear it before rewriting."""
     if spark.catalog.tableExists(table):
         return  # a registered table is overwritten cleanly by mode("overwrite")
-    warehouse = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
-    stale = warehouse / table.split(".")[-1].lower()
+    # a managed table lives under its database's location: the warehouse
+    # itself for `default`, <warehouse>/<db>.db for any other database
+    *qualifier, name = table.split(".")
+    db = qualifier[-1] if qualifier else spark.catalog.currentDatabase()
+    if not spark.catalog.databaseExists(db):
+        return  # saveAsTable reports the missing database itself
+    stale = Path(urlparse(spark.catalog.getDatabase(db).locationUri).path) / name.lower()
     if stale.exists():
         shutil.rmtree(stale)
 

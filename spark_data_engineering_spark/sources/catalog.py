@@ -32,6 +32,9 @@ never lists the other thousand partitions' files.
 from __future__ import annotations
 
 import datetime as _dt
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,13 +97,32 @@ class CatalogStore:
         df: DataFrame,
         batch_ts: _dt.datetime,
         partition_keys: tuple[str, ...] = (),
+        audit: Callable[[], None] | None = None,
     ) -> None:
         """Append one batch as a new partition of the catalog table.
         Re-running the same batch replaces only that partition (dynamic
         partition overwrite), never the table — concurrent readers of
-        older batches are unaffected."""
+        older batches are unaffected.
+
+        With ``audit``, the batch is first staged to a scratch parquet
+        dir, ``audit`` runs over the durable staged batch, and only then
+        is the partition inserted from it; if ``audit`` raises, the
+        catalog is untouched and the error propagates."""
         batch_id = _fmt_ts(batch_ts)
         stamped = df.withColumn(PARTITION_COL, F.lit(batch_id))
+        if audit is None:
+            self._insert(name, stamped, partition_keys)
+            return
+        scratch = tempfile.mkdtemp(prefix="catalog-stage-")
+        try:
+            stamped.write.mode("overwrite").parquet(scratch)
+            audit()
+            staged = self.spark.read.schema(stamped.schema).parquet(scratch)
+            self._insert(name, staged, partition_keys)
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+
+    def _insert(self, name: str, stamped: DataFrame, partition_keys: tuple[str, ...]) -> None:
         keys = [PARTITION_COL, *[k for k in partition_keys if k != PARTITION_COL]]
         table = self._qualified(name)
         writer = (
@@ -174,8 +196,14 @@ class CatalogStore:
         return ids[-1] if ids else None
 
     def read_latest(
-        self, spark: SparkSession, name: str, columns: tuple[str, ...] | None = None
+        self,
+        spark: SparkSession,
+        name: str,
+        columns: tuple[str, ...] | None = None,
+        schema=None,
     ) -> DataFrame:
+        # ``schema`` is accepted for the store interface; the catalog
+        # already holds the table's schema, so nothing is inferred
         latest = self.latest_batch(name)
         if latest is None:
             raise FileNotFoundError(f"no batches in table {self._qualified(name)}")

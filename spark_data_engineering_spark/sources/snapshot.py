@@ -16,8 +16,8 @@ Differences by design:
   The write path is format-pluggable for a Delta/Iceberg deployment.
 
 At 100 TB: one snapshot dir per batch means readers never see partial
-writes (writes go to a new partition value); old snapshots are dropped by
-deleting directories. Partition pruning guarantees a read touches only
+writes (a batch is staged under the table and renamed into place
+whole); old snapshots are dropped by deleting directories. Partition pruning guarantees a read touches only
 the latest batch's files.
 """
 
@@ -25,9 +25,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 PARTITION_COL = "etl_inserted"
 
@@ -51,10 +54,19 @@ class SnapshotStore:
         df: DataFrame,
         batch_ts: _dt.datetime,
         partition_keys: tuple[str, ...] = (),
+        audit: Callable[[], None] | None = None,
     ) -> None:
         """Write a full snapshot stamped with the run's single batch
         timestamp (reference stamps per-node ``datetime.now()`` — quirk
-        Q5; one injected timestamp makes runs deterministic)."""
+        Q5; one injected timestamp makes runs deterministic).
+
+        Write → audit → publish: the batch is written into an
+        underscore-prefixed staging dir under the table, which Spark's
+        partition discovery and ``latest_batch`` both ignore; ``audit``
+        (if given) runs once the files are durable; only then is the
+        staging dir renamed to ``etl_inserted=<batch>``. If the write or
+        the audit raises, the staging dir is removed, nothing is
+        published and the error propagates."""
         batch_id = _fmt_ts(batch_ts)
         batch_dir = os.path.join(self.path(name), f"{PARTITION_COL}={batch_id}")
         if os.path.isdir(batch_dir):
@@ -63,13 +75,17 @@ class SnapshotStore:
             raise FileExistsError(
                 f"snapshot batch {batch_id!r} already exists for table {name!r}"
             )
-        stamped = df.withColumn(PARTITION_COL, F.lit(batch_id))
-        keys = [PARTITION_COL, *[k for k in partition_keys if k != PARTITION_COL]]
-        (
-            stamped.write.mode("append")
-            .partitionBy(*keys)
-            .parquet(self.path(name))
-        )
+        staging = os.path.join(self.path(name), f"_staging-{batch_id}")
+        keys = [k for k in partition_keys if k != PARTITION_COL]
+        writer = df.drop(PARTITION_COL).write.mode("overwrite")
+        try:
+            (writer.partitionBy(*keys) if keys else writer).parquet(staging)
+            if audit is not None:
+                audit()
+            os.rename(staging, batch_dir)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
 
     def latest_batch(self, name: str) -> str | None:
         """Latest batch id from the directory listing — no data scan."""
@@ -87,16 +103,27 @@ class SnapshotStore:
         return max(parts)
 
     def read_latest(
-        self, spark: SparkSession, name: str, columns: list[str] | None = None
+        self,
+        spark: SparkSession,
+        name: str,
+        columns: list[str] | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame:
+        """The latest batch, partition-pruned. ``schema`` is the schema the
+        batch was written with (without ``etl_inserted``): given it, the
+        read declares it instead of running a ``mergeSchema`` footer
+        inference job, with the same resulting schema."""
         latest = self.latest_batch(name)
         if latest is None:
             raise FileNotFoundError(f"no snapshots for table {name!r} under {self.root}")
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(self.path(name))
-            .filter(F.col(PARTITION_COL) == latest)  # partition-pruned
-        )
+        if schema is None:
+            reader = spark.read.option("mergeSchema", "true")
+        else:
+            fields = [f for f in schema.fields if f.name != PARTITION_COL]
+            reader = spark.read.schema(
+                StructType([*fields, StructField(PARTITION_COL, StringType())])
+            )
+        df = reader.parquet(self.path(name)).filter(F.col(PARTITION_COL) == latest)  # partition-pruned
         return df.select(*columns) if columns else df
 
     def read_batch(self, spark: SparkSession, name: str, batch: str) -> DataFrame:
@@ -179,8 +206,6 @@ class SnapshotStore:
         n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
         tmp_dir = os.path.join(self.path(name), f".compact_tmp.{batch}")
         trash_dir = os.path.join(self.path(name), f".compact_old.{batch}")
-        import shutil
-
         shutil.rmtree(tmp_dir, ignore_errors=True)
         # read the one batch dir directly (no partition col in the files),
         # bin-pack with coalesce — a narrow dependency, no shuffle.
@@ -206,8 +231,6 @@ class SnapshotStore:
         Returns the removed batch ids."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        import shutil
-
         removed = []
         for b in self.batches(name)[:-keep_last]:
             shutil.rmtree(os.path.join(self.path(name), f"{PARTITION_COL}={b}"))

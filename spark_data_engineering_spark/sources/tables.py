@@ -26,6 +26,31 @@ TABLES = (
     "embeddings",
 )
 
+# Declared schemas of every input but ``events`` (the reference declares
+# its upstream DDL, SURVEY.md §1.2). Reading with them skips parquet's
+# footer-inference job, so ``load_table`` launches no job at all. They
+# must equal what Spark infers from the files: the parquet reader widens
+# a narrower physical type into a declared wider one without a word, so
+# tests/test_medallion_schemas.py pins each against every committed sf
+# dir. ``events`` keeps inference: its ``ts`` has shipped in two
+# encodings (see load_table).
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+    "c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+    "p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+    "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+    "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+    "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
 # Small dimensions that should broadcast in joins at any scale: these stay
 # small even at 100 TB total (region=5, nation=25; supplier/part grow but
 # far slower than the fact tables).
@@ -44,7 +69,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # as longs. Runtime-settable, so set it here instead of relying on
         # the session having been built by this repo's session factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read.schema(SCHEMAS[name]) if name in SCHEMAS else spark.read
+    df = reader.parquet(f"{sf_dir}/{name}.parquet")
     # Normalize events.ts to TIMESTAMP (LTZ) whatever the parquet encoding:
     # the generator has shipped both INT64 TIMESTAMP(NANOS) (read as a
     # nanosecond long under nanosAsLong) and plain timestamp[us] with no

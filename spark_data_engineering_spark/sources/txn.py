@@ -2191,6 +2191,7 @@ class TxnTable:
         df: DataFrame,
         txn: tuple[str, int] | None = None,
         replace_where: dict[str, object] | None = None,
+        audit=None,
     ) -> int:
         """Full-snapshot replace, or — with ``replace_where`` on a
         partitioned table — DYNAMIC PARTITION OVERWRITE (Delta's
@@ -2205,7 +2206,11 @@ class TxnTable:
         incoming row must fall INSIDE the replaced partition (staged
         files' values are checked before commit; Delta's constraint) —
         otherwise the commit would silently leak rows into partitions it
-        did not replace."""
+        did not replace.
+
+        ``audit`` (a zero-argument callable) runs between staging and the
+        commit; if it raises, the staged files are deleted, nothing is
+        committed and the error propagates (write → audit → publish)."""
         # resolve the files to replace BEFORE staging; _commit re-validates
         df = self._with_generated(self._with_defaults(df))
         v0id = self.version()
@@ -2215,6 +2220,7 @@ class TxnTable:
             removed = self.live_files()
             add, stats = self._stage(df)
             self._enforce_staged(df.sparkSession, add, "overwrite")
+            self._audit_staged(add, audit)
             return self._commit(
                 "overwrite",
                 add,
@@ -2289,6 +2295,7 @@ class TxnTable:
                 "committed (filter the frame or widen the predicate)"
             )
         self._enforce_staged(df.sparkSession, add, "overwrite(replace_where)")
+        self._audit_staged(add, audit)
         return self._commit(
             "overwrite",
             add,
@@ -2300,6 +2307,21 @@ class TxnTable:
             identity_high=id_high,
             identity_base_version=v0id if id_high else None,
         )
+
+    def _audit_staged(self, add: list[str], audit) -> None:
+        """Run ``audit`` over a staged, uncommitted write; on failure drop
+        the staged files (invisible to readers either way) and re-raise."""
+        if audit is None:
+            return
+        try:
+            audit()
+        except BaseException:
+            for f in add:
+                try:
+                    os.remove(os.path.join(self.data_dir, f))
+                except OSError:
+                    pass
+            raise
 
     def write_audit_publish(
         self,
@@ -2349,16 +2371,14 @@ class TxnTable:
             if add
             else df.limit(0)
         )
-        failures = run_checks(staged, tuple(checks))
-        if failures:
-            for f in add:
-                try:
-                    os.remove(os.path.join(self.data_dir, f))
-                except OSError:
-                    pass
-            raise CheckError(
-                f"write_audit_publish: audit failed, nothing published: {failures}"
-            )
+
+        def audit() -> None:
+            if failures := run_checks(staged, tuple(checks)):
+                raise CheckError(
+                    f"write_audit_publish: audit failed, nothing published: {failures}"
+                )
+
+        self._audit_staged(add, audit)
         return self._commit(
             mode,
             add,
@@ -6507,13 +6527,17 @@ class TxnStore:
     def path(self, name: str) -> str:
         return self._table(name).table_dir
 
-    def write(self, name, df: DataFrame, batch_ts, partition_keys=()) -> None:
+    def write(self, name, df: DataFrame, batch_ts, partition_keys=(), audit=None) -> None:
+        """One overwrite commit; ``audit`` runs between staging and the
+        commit, so a batch that fails it is never committed."""
         from spark_data_engineering_spark.sources.snapshot import PARTITION_COL, _fmt_ts
 
         stamped = df.withColumn(PARTITION_COL, F.lit(_fmt_ts(batch_ts)))
-        self._table(name).overwrite(stamped)
+        self._table(name).overwrite(stamped, audit=audit)
 
-    def read_latest(self, spark: SparkSession, name: str, columns=None) -> DataFrame:
+    def read_latest(self, spark: SparkSession, name: str, columns=None, schema=None) -> DataFrame:
+        # ``schema`` is accepted for the store interface; the read already
+        # takes its schema from the log, so it infers nothing either way
         df = self._table(name).read(spark)
         return df.select(*columns) if columns else df
 

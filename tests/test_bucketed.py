@@ -42,6 +42,27 @@ def test_write_bucketed_clears_stale_orphaned_location(spark, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_write_bucketed_clears_stale_location_of_qualified_name(spark, sf_dir):
+    """`db.t` lives at <warehouse>/db.db/t, not <warehouse>/t: the orphan
+    under the database's location is the one to clear."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS b_stale_db")
+    table = "b_stale_db.b_stale_orphan"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    db_dir = Path(urlparse(spark.catalog.getDatabase("b_stale_db").locationUri).path)
+    orphan = db_dir / "b_stale_orphan"
+    orphan.mkdir(parents=True, exist_ok=True)
+    (orphan / "leftover.parquet").write_bytes(b"stale")
+    try:
+        li = load_table(spark, "lineitem", sf_dir).select("l_orderkey").limit(10)
+        write_bucketed(li, table, "l_orderkey", num_buckets=2)
+        assert spark.table(table).count() == 10
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS b_stale_db CASCADE")
+
+
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables, sf_dir):
     li_t, o_t = bucketed_tables
     li, o = read_table(spark, li_t), read_table(spark, o_t)

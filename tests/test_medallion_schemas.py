@@ -4,10 +4,15 @@ strategy of asserting exact output column sets per transform
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from spark_data_engineering_spark.pipeline import build_registry
 from spark_data_engineering_spark.plans import Runner
+from spark_data_engineering_spark.sources.tables import SCHEMAS
 
 EXPECTED = {
     "dim_customer": {
@@ -87,3 +92,34 @@ def test_persist_shared_counts_once(spark):
     assert runner._persisted  # and its DataFrame was persisted
     runner.unpersist_all()
     assert not runner._persisted
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(scope="module")
+def sf_dirs(sf_dir):
+    """Every committed sf dir: the test data beside ``sf_dir`` and the
+    benchmark's inputs."""
+    base = os.path.dirname(sf_dir)
+    return [*(os.path.join(base, s) for s in ("sf0.001", "sf0.01", "sf0.1")),
+            os.path.join(REPO, "perfbench", "data", "sf0.01")]
+
+
+@pytest.fixture(scope="module")
+def scaled_dir(tmp_path_factory, sf_dir):
+    dst = str(tmp_path_factory.mktemp("scaled"))
+    tool = os.path.join(REPO, "tools", "make_scale_data.py")
+    subprocess.run([sys.executable, tool, sf_dir, dst, "2"], check=True, capture_output=True)
+    return dst
+
+
+@pytest.mark.parametrize("table", sorted(SCHEMAS))
+def test_declared_input_schema_matches_every_sf_dir(spark, sf_dirs, scaled_dir, table):
+    """``load_table`` reads with ``SCHEMAS`` instead of inferring it; the
+    parquet reader would widen a narrower file type into it silently, so
+    the declaration must equal what Spark infers, in every data dir."""
+    declared = spark.read.schema(SCHEMAS[table]).parquet(f"{sf_dirs[0]}/{table}.parquet").schema
+    for d in (*sf_dirs, scaled_dir):
+        assert spark.read.parquet(f"{d}/{table}.parquet").schema == declared, (d, table)
+    assert "events" not in SCHEMAS

@@ -53,7 +53,7 @@ def main() -> None:
     emit(
         "customer",
         f"""
-        SELECT * REPLACE (c_custkey + r * stride AS c_custkey)
+        SELECT * EXCLUDE (stride, r) REPLACE (c_custkey + r * stride AS c_custkey)
         FROM '{src}/customer.parquet',
              (SELECT max(c_custkey) + 1 AS stride FROM '{src}/customer.parquet'),
              reps
@@ -62,7 +62,8 @@ def main() -> None:
     emit(
         "orders",
         f"""
-        SELECT * REPLACE (o_orderkey + r * ostride AS o_orderkey,
+        SELECT * EXCLUDE (ostride, cstride, r)
+               REPLACE (o_orderkey + r * ostride AS o_orderkey,
                           o_custkey + r * cstride AS o_custkey)
         FROM '{src}/orders.parquet',
              (SELECT max(o_orderkey) + 1 AS ostride FROM '{src}/orders.parquet'),
@@ -73,7 +74,7 @@ def main() -> None:
     emit(
         "lineitem",
         f"""
-        SELECT * REPLACE (l_orderkey + r * ostride AS l_orderkey)
+        SELECT * EXCLUDE (ostride, r) REPLACE (l_orderkey + r * ostride AS l_orderkey)
         FROM '{src}/lineitem.parquet',
              (SELECT max(o_orderkey) + 1 AS ostride FROM '{src}/orders.parquet'),
              reps
@@ -82,7 +83,8 @@ def main() -> None:
     emit(
         "events",
         f"""
-        SELECT * REPLACE (event_id + r * estride AS event_id,
+        SELECT * EXCLUDE (estride, ustride, r)
+               REPLACE (event_id + r * estride AS event_id,
                           user_id + r * ustride AS user_id)
         FROM '{src}/events.parquet',
              (SELECT max(event_id) + 1 AS estride FROM '{src}/events.parquet'),
@@ -93,7 +95,7 @@ def main() -> None:
     emit(
         "documents",
         f"""
-        SELECT * REPLACE (doc_id + r * dstride AS doc_id,
+        SELECT * EXCLUDE (dstride, r) REPLACE (doc_id + r * dstride AS doc_id,
                CASE WHEN r = 0 THEN text ELSE
                  -- fixed 8-hex-char tokens: 4e9 token space makes the
                  -- word mapping collision-free in practice, so the
@@ -110,7 +112,7 @@ def main() -> None:
     emit(
         "embeddings",
         f"""
-        SELECT * REPLACE (vec_id + r * vstride AS vec_id,
+        SELECT * EXCLUDE (vstride, r) REPLACE (vec_id + r * vstride AS vec_id,
                CASE WHEN r = 0 THEN embedding ELSE
                  list_transform(list_zip(embedding,
                      range(1, len(embedding) + 1)),
