@@ -228,7 +228,13 @@ class SnapshotStore:
     def vacuum(self, name: str, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` snapshot batches
         (Delta VACUUM analog — bounded storage under daily batches).
-        Returns the removed batch ids."""
+        Returns the removed batch ids.
+
+        Also removes what a crashed writer left behind: ``_staging-*``
+        dirs (killed between its staged write and the rename) and
+        ``.compact_tmp.*`` dirs. Vacuum must therefore not run beside a
+        writer of the same table — it would delete the writer's
+        in-flight staging."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         removed = []
@@ -238,7 +244,8 @@ class SnapshotStore:
         # repair/clean compact leftovers from a crashed compact():
         # .compact_old.<batch> with the batch dir MISSING means the crash
         # hit between the two renames — restore it (data-preserving);
-        # otherwise (or for .compact_tmp.*) the dir is garbage
+        # otherwise (or for .compact_tmp.* and a crashed write's
+        # _staging-*) the dir is garbage
         table_dir = self.path(name)
         if os.path.isdir(table_dir):
             for d in os.listdir(table_dir):
@@ -251,7 +258,7 @@ class SnapshotStore:
                         os.rename(full, batch_dir)
                     else:
                         shutil.rmtree(full)
-                elif d.startswith(".compact_tmp."):
+                elif d.startswith((".compact_tmp.", "_staging-")):
                     shutil.rmtree(full)
         return removed
 

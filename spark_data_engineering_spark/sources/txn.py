@@ -35,6 +35,8 @@ checkpoints.
 
 from __future__ import annotations
 
+import copy
+import itertools
 import json
 import os
 import re
@@ -285,30 +287,16 @@ class TxnTable:
         # once recorded (a reopen with a conflicting declaration is
         # refused). See partition_cols() for resolution.
         self._pcols_param = tuple(partition_cols)
-        self._pcols_cache: tuple[str, ...] | None = None
-        self._pcols_cache_v: int = -1  # head the cache was resolved at
-        # True once a hive-partitioned CONVERT adopted files that lack
-        # the partition columns physically — reads then project them
-        # from the per-file partitionValues (see _read_files_meta).
-        self._hive_cache: bool | None = None
-        self._hive_cache_v: int = -1
-        # True once a set_partitioning commit landed (mixed layouts
-        # possible) — sticky, re-stamped by _stamp_props so resolution
-        # terminates near the head once set (see partition_evolved())
-        self._pevolved_cache: bool | None = None
-        self._pevolved_cache_v: int = -1
-        # tag map cache (round 12), version-keyed like the others —
-        # _stamp_props consults tags() on EVERY commit, and an uncached
-        # resolution is a full log scan on untagged tables
-        self._tags_cache: dict[str, int] | None = None
-        self._tags_cache_v: int = -1
+        # the head cache of every log property (see _newest): field ->
+        # newest commit carrying it, as of head version _props_v
+        self._props: dict[str, dict] = {}
+        self._props_v = 0
         # generated columns (Delta's GENERATED ALWAYS AS): name -> SQL
         # expression, declared at creation, recorded in every commit,
         # immutable once recorded — see generated_cols() for resolution.
         # Missing at write -> computed; supplied at write -> validated
         # against the expression over the STAGED bytes (_enforce_staged)
         self._gcols_param: dict[str, str] = dict(generated_cols or {})
-        self._gcols_cache: dict[str, str] | None = None
         # identity columns (Delta's GENERATED ALWAYS AS IDENTITY):
         # name -> {"start": int, "step": int}, declared at creation,
         # recorded in every commit, immutable once recorded. Values are
@@ -323,7 +311,6 @@ class TxnTable:
         for c, s in self._idcols_param.items():
             if s["step"] == 0:
                 raise ValueError(f"identity column {c!r}: step must be nonzero")
-        self._idcols_cache: dict[str, dict] | None = None
         # a BRANCH persists a marker pointing at the owner's shared
         # data/dv dirs (relative, so the tree can move) — any direct
         # open (vacuum's ref walk, format("txn") on a branch path, a
@@ -422,7 +409,9 @@ class TxnTable:
     def _checkpoint_path(self, v: int) -> str:
         return os.path.join(self.log_dir, f"{v:0{_VERSION_DIGITS}d}.checkpoint.json")
 
-    def _latest_checkpoint(self, at_version: int) -> tuple[int, list[str], dict]:
+    def _latest_checkpoint(self, at_version: int) -> tuple[int, dict]:
+        """The newest checkpoint at or below ``at_version``: its version
+        and its state, or ``(0, {})`` when there is none."""
         cps = sorted(
             int(f.split(".")[0])
             for f in os.listdir(self.log_dir)
@@ -430,61 +419,148 @@ class TxnTable:
         )
         cps = [v for v in cps if v <= at_version]
         if not cps:
-            return 0, [], {}
+            return 0, {}
         with open(self._checkpoint_path(cps[-1])) as f:
-            state = json.load(f)
-            return cps[-1], state["live"], state.get("stats", {})
+            return cps[-1], json.load(f)
+
+    def _commits_in(self, lo: int, hi: int):
+        """Yield ``(version, commit)`` for every commit in ``(lo, hi]``,
+        oldest first."""
+        for v in self._commit_files():
+            if lo < v <= hi:
+                yield v, self._read_commit(v)
+
+    def _replay(self, at_version: int | None = None) -> dict:
+        """The table state at a version: ONE replay of the log from the
+        nearest checkpoint (Delta's snapshot reconstruction), in the
+        checkpoint's own shape — ``live`` (sorted data file names),
+        ``stats`` (per live file), ``txns`` (per-app streaming epoch),
+        ``dvs`` (sidecar names, probe order) and ``dv_deleted`` (per-
+        data-file deleted-row counts). ``live_files``, ``file_stats``,
+        ``dv_state`` and ``last_epoch`` read from it and
+        ``_write_checkpoint`` persists it, so replay cost stays
+        O(commits since checkpoint) however long the table lived.
+
+        A data file's deleted count is dropped when the file itself is
+        removed (compact/overwrite/MERGE materialize the deletes), while
+        its sidecar entries stay — they anti-join against nothing once
+        the file is gone."""
+        head = self.version() if at_version is None else at_version
+        start, cp = self._latest_checkpoint(head)
+        live = set(cp.get("live", ()))
+        stats = dict(cp.get("stats", {}))
+        txns = dict(cp.get("txns", {}))
+        sidecars = list(cp.get("dvs", ()))
+        deleted = dict(cp.get("dv_deleted", {}))
+        for _, c in self._commits_in(start, head):
+            for f in c.get("remove", ()):
+                live.discard(f)
+                stats.pop(f, None)
+                deleted.pop(f, None)
+            live.update(c.get("add", ()))
+            stats.update(c.get("stats", {}))
+            t = c.get("txn")
+            if t:
+                txns[t["app"]] = max(txns.get(t["app"], -1), t["epoch"])
+            if c.get("dv_remove"):
+                # dv-prune maintenance: drop all-dead sidecars from the
+                # probe list (their files left the live set; the counts
+                # popped when those files were removed)
+                gone = set(c["dv_remove"])
+                sidecars = [s for s in sidecars if s not in gone]
+            if c.get("dv_add"):
+                sidecars.append(c["dv_add"])
+                for f, n in c.get("dv_counts", {}).items():
+                    deleted[f] = deleted.get(f, 0) + int(n)
+            # a restore re-adds files whose deleted counts were popped
+            # when they were removed — their (still-listed) sidecar
+            # positions apply again, so the counts must too
+            for f, n in c.get("dv_counts_restore", {}).items():
+                deleted[f] = deleted.get(f, 0) + int(n)
+        ordered = sorted(live)
+        return {
+            "version": head,
+            "live": ordered,
+            "stats": {f: stats.get(f, {}) for f in ordered},
+            "txns": txns,
+            "dvs": sidecars,
+            "dv_deleted": deleted,
+        }
 
     def live_files(self, at_version: int | None = None) -> list[str]:
-        """Replay the log (from the nearest checkpoint) to the live file
-        set at a version — the snapshot readers see."""
-        head = self.version() if at_version is None else at_version
-        start, live_list, _ = self._latest_checkpoint(head)
-        live = set(live_list)
-        for v in self._commit_files():
-            if start < v <= head:
-                c = self._read_commit(v)
-                live.difference_update(c.get("remove", ()))
-                live.update(c.get("add", ()))
-        return sorted(live)
+        """The live file set at a version — the snapshot readers see."""
+        return self._replay(at_version)["live"]
 
     def dv_state(self, at_version: int | None = None) -> tuple[list[str], dict[str, int]]:
         """Deletion-vector state at a version: (sidecar names, per-data-
-        file deleted-row counts). Replayed from the nearest checkpoint
-        like ``live_files``; a data file's count is dropped when the
-        file itself is removed (compact/overwrite/MERGE materialize the
-        deletes), while its sidecar entries stay — they anti-join
-        against nothing once the file is gone."""
-        head = self.version() if at_version is None else at_version
-        start, _, _ = self._latest_checkpoint(head)
-        sidecars: list[str] = []
-        deleted: dict[str, int] = {}
-        if start:
-            with open(self._checkpoint_path(start)) as f:
-                state = json.load(f)
-            sidecars = list(state.get("dvs", []))
-            deleted = dict(state.get("dv_deleted", {}))
-        for v in self._commit_files():
-            if start < v <= head:
+        file deleted-row counts), from ``_replay``."""
+        state = self._replay(at_version)
+        return state["dvs"], state["dv_deleted"]
+
+    # ---- log properties -------------------------------------------------
+    # A table-level property (partitioning, schema, constraints, tags,
+    # ...) is the value in the NEWEST commit at or below the version that
+    # carries its field. ``_stamp_props`` re-records the sticky ones on
+    # every commit, so they resolve at the head commit; the rest may sit
+    # anywhere in the log.
+
+    _LOG_PROPS = (
+        "partition_cols",
+        "hive_origin",
+        "partition_evolved",
+        "tags",
+        "generated_cols",
+        "identity_cols",
+        "identity_high",
+        "schema",
+        "constraints",
+        "properties",
+        "column_stats",
+    )
+
+    @staticmethod
+    def _carries(c: dict, field: str) -> bool:
+        if field == "partition_evolved":
+            # logs from before the stamped marker existed: the
+            # partition-evolve commit itself counts
+            return bool(c.get(field)) or c.get("action") == "partition-evolve"
+        return field in c
+
+    def _newest_each(self, fields, hi: int, lo: int = 0) -> dict[str, dict]:
+        """For each of ``fields``, the newest commit in ``(lo, hi]``
+        carrying it (fields no commit carries are absent) — one
+        backwards walk that stops once every field is found."""
+        found: dict[str, dict] = {}
+        for v in reversed(self._commit_files()):
+            if v <= lo or len(found) == len(fields):
+                break
+            if v <= hi:
                 c = self._read_commit(v)
-                for f in c.get("remove", ()):
-                    deleted.pop(f, None)
-                if c.get("dv_remove"):
-                    # dv-prune maintenance: drop all-dead sidecars from
-                    # the probe list (their files left the live set; the
-                    # counts popped when those files were removed)
-                    gone = set(c["dv_remove"])
-                    sidecars = [s for s in sidecars if s not in gone]
-                if c.get("dv_add"):
-                    sidecars.append(c["dv_add"])
-                    for f, n in c.get("dv_counts", {}).items():
-                        deleted[f] = deleted.get(f, 0) + int(n)
-                # a restore re-adds files whose deleted counts were
-                # popped when they were removed — their (still-listed)
-                # sidecar positions apply again, so the counts must too
-                for f, n in c.get("dv_counts_restore", {}).items():
-                    deleted[f] = deleted.get(f, 0) + int(n)
-        return sidecars, deleted
+                for f in fields:
+                    if f not in found and self._carries(c, f):
+                        found[f] = c
+        return found
+
+    def _newest(self, field: str, at_version: int | None = None) -> dict | None:
+        """The newest commit at or below ``at_version`` (default: the
+        head) carrying ``field``, or None. The head is served from ONE
+        version-keyed cache of every log property: a refresh reads only
+        the commits that landed since the cached head and updates all
+        fields at once — so a handle sees another handle's or process's
+        DDL on its next call (a stale answer would make its next commit
+        re-stamp the old value, a lost DDL), and a warm handle's write
+        costs no log walk however long the log grows."""
+        head = self.version()
+        if at_version is not None and at_version < head:
+            return self._newest_each((field,), at_version).get(field)
+        if head != self._props_v:
+            if head < self._props_v:  # the log was replaced: start over
+                self._props, self._props_v = {}, 0
+            self._props.update(
+                self._newest_each(self._LOG_PROPS, head, self._props_v)
+            )
+            self._props_v = head
+        return self._props.get(field)
 
     def partition_cols(self, at_version: int | None = None) -> tuple[str, ...]:
         """The table's declared hive-style partition columns — a LOG
@@ -494,28 +570,8 @@ class TxnTable:
         a bare ``TxnTable(root, name)`` — partitions identically to the
         creating handle). Re-declaring a different layout via the
         CONSTRUCTOR is refused; ``set_partitioning`` (round 11) is the
-        one sanctioned way to change it. The head cache is VERSION-
-        KEYED and refreshed incrementally: under partition evolution
-        another handle or process may evolve the scheme, and a stale
-        cache here would make this handle's next commit re-STAMP the
-        old scheme (a lost DDL — the commit record's partition_cols
-        would out-resolve the evolve). Only commits newer than the
-        cached head can change the answer, so the refresh reads just
-        that range."""
-        head = self.version() if at_version is None else at_version
-        if at_version is None and self._pcols_cache is not None:
-            if head == self._pcols_cache_v:
-                return self._pcols_cache
-            for v in reversed(self._commit_files()):
-                if v <= self._pcols_cache_v:
-                    break
-                if v <= head:
-                    c = self._read_commit(v)
-                    if "partition_cols" in c:
-                        self._pcols_cache = tuple(c["partition_cols"])
-                        break
-            self._pcols_cache_v = head
-            return self._pcols_cache
+        one sanctioned way to change it."""
+        c = self._newest("partition_cols", at_version)
         # ``None`` = no commit carries the field (table predates the
         # property / is empty); ``()`` = a commit EXPLICITLY recorded an
         # unpartitioned scheme (set_partitioning(())). The distinction
@@ -523,25 +579,23 @@ class TxnTable:
         # constructor param and trip the immutability guard — `found or
         # param` would silently resurrect the dropped scheme and the
         # handle's next commit would re-stamp it (lost DDL).
-        found: tuple[str, ...] | None = None
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "partition_cols" in c:
-                    found = tuple(c["partition_cols"])
-                    break
+        found = None if c is None else tuple(c["partition_cols"])
         if at_version is not None:
             return found if found is not None else ()
-        if found is not None and self._pcols_param and self._pcols_param != found:
+        if found is None:
+            return self._pcols_param
+        if self._pcols_param and self._pcols_param != found:
             raise ValueError(
                 f"table {self.table_dir} is partitioned by {found}; "
                 f"re-declaring partition_cols={self._pcols_param} is "
                 "refused (partitioning is immutable once recorded; use "
                 "set_partitioning to evolve it)"
             )
-        self._pcols_cache = found if found is not None else self._pcols_param
-        self._pcols_cache_v = head
-        return self._pcols_cache
+        # the declaration is spent once the log records it: from here
+        # on the log alone decides, so another handle's set_partitioning
+        # is an evolution this handle follows, not a re-declaration
+        self._pcols_param = ()
+        return found
 
     def hive_origin(self, at_version: int | None = None) -> bool:
         """True iff the table (at the version) has ever adopted
@@ -550,84 +604,25 @@ class TxnTable:
         the partition columns, so every read projects them from the
         commit log's per-file ``partitionValues`` (one broadcast join
         on ``__file``; see ``_read_files_meta``). A LOG property
-        resolved like ``partition_cols`` (latest commit carrying the
-        field) and re-stamped by ``_stamp_props`` so checkpoint
-        compaction can never lose it. Sticky by design: rewrites
-        (compact/reorg/merge) re-stage through ``_stage`` and
-        materialize real columns, but proving no hive-origin file
-        remains live would cost a footer walk — the projection is a
-        correct no-op over materialized files (coalesce of a non-null
-        column), so it simply stays on."""
-        head = self.version() if at_version is None else at_version
-        if at_version is None and self._hive_cache is not None:
-            # version-keyed incremental refresh (round 11, same race as
-            # partition_cols): a handle that cached False before another
-            # process's CONVERT seeded the table would skip the
-            # partition-value projection forever
-            if head == self._hive_cache_v:
-                return self._hive_cache
-            for v in reversed(self._commit_files()):
-                if v <= self._hive_cache_v:
-                    break
-                if v <= head:
-                    c = self._read_commit(v)
-                    if "hive_origin" in c:
-                        self._hive_cache = bool(c["hive_origin"])
-                        break
-            self._hive_cache_v = head
-            return self._hive_cache
-        found = False
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "hive_origin" in c:
-                    found = bool(c["hive_origin"])
-                    break
-        if at_version is None:
-            self._hive_cache = found
-            self._hive_cache_v = head
-        return found
+        re-stamped by ``_stamp_props`` so checkpoint compaction can
+        never lose it. Sticky by design: rewrites (compact/reorg/merge)
+        re-stage through ``_stage`` and materialize real columns, but
+        proving no hive-origin file remains live would cost a footer
+        walk — the projection is a correct no-op over materialized
+        files (coalesce of a non-null column), so it simply stays on."""
+        c = self._newest("hive_origin", at_version)
+        return c is not None and bool(c["hive_origin"])
 
     def partition_evolved(self, at_version: int | None = None) -> bool:
         """True iff a ``set_partitioning`` commit exists at or below the
         version — mixed file layouts are then possible and consumers
         (``table_info``, ``overwrite(replace_where=...)`` diagnostics)
-        must reason per-file. A sticky LOG property (ADVICE r11: the
-        old ``table_info`` implementation re-read EVERY commit per
-        call): ``set_partitioning`` stamps ``partition_evolved`` and
-        ``_stamp_props`` re-stamps it on every later commit, so once
-        set, resolution terminates at the head commit; commits from
-        before the marker existed are covered by also treating a
-        ``partition-evolve`` action record as True during the walk.
-        Version-keyed cache, incremental refresh like
-        ``partition_cols``/``hive_origin``."""
-        head = self.version() if at_version is None else at_version
-
-        def _hit(c: dict) -> bool:
-            return bool(c.get("partition_evolved")) or (
-                c.get("action") == "partition-evolve"
-            )
-
-        if at_version is None and self._pevolved_cache is not None:
-            if head == self._pevolved_cache_v:
-                return self._pevolved_cache
-            for v in reversed(self._commit_files()):
-                if v <= self._pevolved_cache_v:
-                    break
-                if v <= head and _hit(self._read_commit(v)):
-                    self._pevolved_cache = True
-                    break
-            self._pevolved_cache_v = head
-            return self._pevolved_cache
-        found = False
-        for v in reversed(self._commit_files()):
-            if v <= head and _hit(self._read_commit(v)):
-                found = True
-                break
-        if at_version is None:
-            self._pevolved_cache = found
-            self._pevolved_cache_v = head
-        return found
+        must reason per-file. A sticky LOG property: ``set_partitioning``
+        stamps ``partition_evolved`` and ``_stamp_props`` re-stamps it
+        on every later commit, so once set, resolution terminates at the
+        head commit; a ``partition-evolve`` commit from before the
+        marker existed counts too."""
+        return self._newest("partition_evolved", at_version) is not None
 
     def generated_cols(self, at_version: int | None = None) -> dict[str, str]:
         """The table's generated columns (Delta's GENERATED ALWAYS AS):
@@ -637,16 +632,8 @@ class TxnTable:
         generated column may be a partition column — the intended use:
         partition by ``year(o_orderdate)`` without every writer having
         to remember to derive it."""
-        head = self.version() if at_version is None else at_version
-        if at_version is None and self._gcols_cache is not None:
-            return self._gcols_cache
-        found: dict[str, str] = {}
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "generated_cols" in c:
-                    found = dict(c["generated_cols"])
-                    break
+        c = self._newest("generated_cols", at_version)
+        found = dict(c["generated_cols"]) if c else {}
         if at_version is not None:
             return found
         if found and self._gcols_param and self._gcols_param != found:
@@ -656,24 +643,15 @@ class TxnTable:
                 "refused (generation expressions are immutable once "
                 "recorded — rewrite into a new table to change them)"
             )
-        self._gcols_cache = found or dict(self._gcols_param)
-        return self._gcols_cache
+        return found or dict(self._gcols_param)
 
     def identity_cols(self, at_version: int | None = None) -> dict[str, dict]:
         """The table's identity columns (Delta's GENERATED ALWAYS AS
         IDENTITY): name -> {"start", "step"}, a LOG property resolved
         exactly like ``generated_cols`` (latest commit carrying the
         field; immutable once recorded)."""
-        head = self.version() if at_version is None else at_version
-        if at_version is None and self._idcols_cache is not None:
-            return self._idcols_cache
-        found: dict[str, dict] = {}
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "identity_cols" in c:
-                    found = {k: dict(s) for k, s in c["identity_cols"].items()}
-                    break
+        c = self._newest("identity_cols", at_version)
+        found = {k: dict(s) for k, s in c["identity_cols"].items()} if c else {}
         if at_version is not None:
             return found
         if found and self._idcols_param and self._idcols_param != found:
@@ -683,8 +661,7 @@ class TxnTable:
                 "refused (identity specs are immutable once recorded — "
                 "rewrite into a new table to change them)"
             )
-        self._idcols_cache = found or dict(self._idcols_param)
-        return self._idcols_cache
+        return found or {k: dict(s) for k, s in self._idcols_param.items()}
 
     def identity_high(self, at_version: int | None = None) -> dict[str, int]:
         """Per-identity-column LAST ASSIGNED value: the newest commit
@@ -695,16 +672,10 @@ class TxnTable:
         map to ``start - step``."""
         ids = self.identity_cols(at_version)
         high = {c: s["start"] - s["step"] for c, s in ids.items()}
-        head = self.version() if at_version is None else at_version
-        for v in reversed(self._commit_files()):
-            if v > head:
-                continue
-            c = self._read_commit(v)
-            if "identity_high" in c:
-                for k, val in c["identity_high"].items():
-                    if k in high:
-                        high[k] = int(val)
-                break
+        c = self._newest("identity_high", at_version)
+        for k, val in (c["identity_high"] if c else {}).items():
+            if k in high:
+                high[k] = int(val)
         return high
 
     def _with_identity(
@@ -772,33 +743,27 @@ class TxnTable:
         return out, new_high
 
     def _stamp_props(self, record: dict, at_version: int | None = None) -> dict:
-        """Stamp the table-level LOG properties (``partition_cols``,
-        ``generated_cols``) into a commit record — the ONE place every
-        handmade record picks them up (``_commit``, the DDL/maintenance
-        CAS records, ``append_idempotent``, branch seeds), so a new
-        property cannot miss a site the way ``append_idempotent`` once
-        missed ``partition_cols`` (the round-8 model-search bug)."""
-        pc = self.partition_cols(at_version)
-        if pc:
-            record["partition_cols"] = list(pc)
-        gc = self.generated_cols(at_version)
-        if gc:
-            record["generated_cols"] = dict(gc)
-        ic = self.identity_cols(at_version)
-        if ic:
-            record["identity_cols"] = {k: dict(s) for k, s in ic.items()}
-        if self.hive_origin(at_version):
-            record["hive_origin"] = True
-        if self.partition_evolved(at_version):
-            record["partition_evolved"] = True
-        # tags re-stamp like the other log properties so resolution
-        # stays near the head on long-lived tagged tables — but NEVER
-        # over a map the caller already set (create_tag/delete_tag put
-        # their NEW map in the record before stamping)
-        if "tags" not in record:
-            tg = self.tags(at_version)
-            if tg:
-                record["tags"] = dict(tg)
+        """Stamp the table-level LOG properties (partition / generated /
+        identity columns, ``hive_origin``, ``partition_evolved``, tags)
+        into a commit record — the ONE place every record picks them up
+        (``_commit_loop``, branch and clone seeds), so a new property
+        cannot miss a site the way ``append_idempotent`` once missed
+        ``partition_cols`` (the round-8 model-search bug). Re-recording
+        them on every commit keeps resolution at the head commit, and a
+        branch seed or replay carries them forward. A field the caller
+        already set (a DDL's new tag map or partition scheme) is never
+        overwritten."""
+        props = {
+            "partition_cols": list(self.partition_cols(at_version)),
+            "generated_cols": self.generated_cols(at_version),
+            "identity_cols": self.identity_cols(at_version),
+            "hive_origin": self.hive_origin(at_version),
+            "partition_evolved": self.partition_evolved(at_version),
+            "tags": self.tags(at_version),
+        }
+        for field, value in props.items():
+            if value and field not in record:
+                record[field] = value
         return record
 
     def _with_generated(self, df: DataFrame) -> DataFrame:
@@ -841,16 +806,7 @@ class TxnTable:
         source of truth, so planning a pruned scan is a metadata-only
         operation: at 100 TB the driver touches a few KB of JSON instead
         of listing and footer-reading millions of objects."""
-        head = self.version() if at_version is None else at_version
-        start, _, stats = self._latest_checkpoint(head)
-        stats = dict(stats)
-        for v in self._commit_files():
-            if start < v <= head:
-                c = self._read_commit(v)
-                for f in c.get("remove", ()):
-                    stats.pop(f, None)
-                stats.update(c.get("stats", {}))
-        return {f: stats.get(f, {}) for f in self.live_files(head)}
+        return self._replay(at_version)["stats"]
 
     def count_rows(
         self, spark: SparkSession | None = None, at_version: int | None = None
@@ -1003,12 +959,12 @@ class TxnTable:
     def _try_commit(self, record: dict) -> bool:
         """Atomically claim version ``record['version']``. True on win.
 
-        Every commit path funnels through here (the ``_commit`` retry
-        loop, rebase's log swap, dv-prune's CAS, branch seeding), so
-        this is the single place the commit TIMESTAMP is stamped —
-        the ``ts`` field ``version_at_timestamp`` resolves
-        ``timestampAsOf`` time travel against (Delta records the same
-        in each log entry's commitInfo)."""
+        Every commit path funnels through here (``_commit_loop``,
+        branch and clone seeding), so this is the single place the
+        commit TIMESTAMP is stamped — the ``ts`` field
+        ``version_at_timestamp`` resolves ``timestampAsOf`` time travel
+        against (Delta records the same in each log entry's
+        commitInfo)."""
         import time
 
         record.setdefault("ts", round(time.time(), 6))
@@ -1023,6 +979,39 @@ class TxnTable:
             return False
         finally:
             os.unlink(tmp)
+
+    # metadata DDL gives up (ConcurrentWriteError) after this many lost
+    # races; data commits retry until they win or a check refuses
+    _DDL_TRIES = 5
+
+    def _commit_loop(self, build, tries: int | None = None, what: str = "") -> int | None:
+        """THE commit loop (optimistic concurrency): read the head, build
+        the record against it — ``build(head)`` raises to refuse or
+        returns None to decline — stamp the log properties, claim
+        ``head + 1`` with ``_try_commit``, and write a checkpoint every
+        ``checkpoint_every`` versions. A lost race re-runs the build
+        (and so every conflict check in it) against the new head, up to
+        ``tries`` times (unbounded when None). Returns the committed
+        version, or None when the build declined."""
+        for _ in range(tries) if tries else itertools.count():
+            head = self.version()
+            body = build(head)
+            if body is None:
+                return None
+            record = self._stamp_props({"version": head + 1, **body})
+            if self._try_commit(record):
+                v = head + 1
+                if v % self.checkpoint_every == 0:
+                    self._write_checkpoint(v)
+                return v
+        raise ConcurrentWriteError(
+            f"{what}: lost the commit race {tries} times; retry"
+        )
+
+    @staticmethod
+    def _meta(action: str, **fields) -> dict:
+        """A metadata-only commit body: no file added or removed."""
+        return {"action": action, "add": [], "remove": [], **fields}
 
     def _commit(
         self,
@@ -1040,14 +1029,18 @@ class TxnTable:
         extra: dict | None = None,
         identity_high: dict[str, int] | None = None,
         identity_base_version: int | None = None,
-    ) -> int:
+        idempotent: bool = False,
+    ) -> int | None:
         """Commit with optimistic retry. Appends retry blindly (their
         files conflict with nothing); rewrites re-validate that every
         file they remove is still live under the new head. ``txn``
         stamps an (app, epoch) watermark into the commit record — the
-        same exactly-once primitive ``append_idempotent`` uses, here for
+        exactly-once primitive of ``append_idempotent``, also used by
         rewrite-style commits (e.g. an incremental view refresh records
-        which base version it consumed, atomically with its data).
+        which base version it consumed, atomically with its data). With
+        ``idempotent`` the epoch is re-checked against every head
+        attempted: when a racing replica of the same stream already
+        landed it, nothing is committed and the result is None.
 
         Deletion-vector commits (``dv_add``/``dv_counts``) validate that
         every data file they mark is STILL LIVE at the commit head (a
@@ -1064,8 +1057,17 @@ class TxnTable:
         DV-deleted rows into new files while the remove pops the DV's
         per-file counts — the delete would silently vanish (the mirror
         of the dv_base_version check above)."""
-        while True:
-            head = self.version()
+
+        def concurrent(since: int, head: int, field: str, mine) -> set:
+            """``mine`` ∩ the keys of ``field`` in commits (since, head]."""
+            hit: set = set()
+            for _, c in self._commits_in(since, head):
+                hit.update(set(mine).intersection(c.get(field) or {}))
+            return hit
+
+        def build(head: int) -> dict | None:
+            if idempotent and txn[1] <= self.last_epoch(txn[0]):
+                return None
             check_live = list(remove) + (sorted(dv_counts) if dv_counts else [])
             if check_live:
                 still_live = set(self.live_files(head))
@@ -1076,57 +1078,43 @@ class TxnTable:
                         f"concurrent commit: {gone[:3]}..."
                     )
             if remove and base_version is not None:
-                removing = set(remove)
-                for cv in self._commit_files():
-                    if base_version < cv <= head:
-                        other = self._read_commit(cv).get("dv_counts") or {}
-                        hit = removing.intersection(other)
-                        if hit:
-                            raise ConcurrentWriteError(
-                                f"{action} conflicts: a concurrent deletion "
-                                f"vector landed on files this rewrite would "
-                                f"replace (pre-DV survivors would resurrect "
-                                f"the deleted rows): {sorted(hit)[:3]}..."
-                            )
+                hit = concurrent(base_version, head, "dv_counts", remove)
+                if hit:
+                    raise ConcurrentWriteError(
+                        f"{action} conflicts: a concurrent deletion "
+                        f"vector landed on files this rewrite would "
+                        f"replace (pre-DV survivors would resurrect "
+                        f"the deleted rows): {sorted(hit)[:3]}..."
+                    )
             if dv_counts and dv_base_version is not None:
-                mine = set(dv_counts)
-                for cv in self._commit_files():
-                    if dv_base_version < cv <= head:
-                        other = self._read_commit(cv).get("dv_counts") or {}
-                        hit = mine.intersection(other)
-                        if hit:
-                            raise ConcurrentWriteError(
-                                f"{action} conflicts: a concurrent deletion "
-                                f"vector landed on {sorted(hit)[:3]}..."
-                            )
+                hit = concurrent(dv_base_version, head, "dv_counts", dv_counts)
+                if hit:
+                    raise ConcurrentWriteError(
+                        f"{action} conflicts: a concurrent deletion "
+                        f"vector landed on {sorted(hit)[:3]}..."
+                    )
             if identity_high and identity_base_version is not None:
                 # identity values were allocated from the watermark read
                 # at identity_base_version; a concurrent allocation from
                 # the same watermark produced COLLIDING ids in already-
                 # staged bytes, so this is a refusal, not a retry
-                mine_cols = set(identity_high)
-                for cv in self._commit_files():
-                    if identity_base_version < cv <= head:
-                        other = self._read_commit(cv).get("identity_high") or {}
-                        hit = mine_cols.intersection(other)
-                        if hit:
-                            raise ConcurrentWriteError(
-                                f"{action} conflicts: a concurrent write "
-                                f"allocated identity values for "
-                                f"{sorted(hit)} from the same watermark; "
-                                "re-run the write (ids must be re-assigned)"
-                            )
-            record = {"version": head + 1, "action": action, "add": add, "remove": remove}
+                hit = concurrent(
+                    identity_base_version, head, "identity_high", identity_high
+                )
+                if hit:
+                    raise ConcurrentWriteError(
+                        f"{action} conflicts: a concurrent write "
+                        f"allocated identity values for "
+                        f"{sorted(hit)} from the same watermark; "
+                        "re-run the write (ids must be re-assigned)"
+                    )
+            record = {"action": action, "add": add, "remove": remove}
             if identity_high:
                 # never regress the mark, whatever order replays land in
                 cur = self.identity_high()
                 record["identity_high"] = {
                     c: max(v, cur.get(c, v)) for c, v in identity_high.items()
                 }
-            # table-level log properties are re-recorded on every commit
-            # so resolution never walks past the most recent commits
-            # (and a branch seed / replay carries them forward)
-            self._stamp_props(record)
             if extra:
                 # provenance fields (e.g. merged_from) — never dispatched
                 # on, so downstream action-string consumers (read_changes,
@@ -1151,42 +1139,17 @@ class TxnTable:
                 )
             if txn is not None:
                 record["txn"] = {"app": txn[0], "epoch": txn[1]}
-            if self._try_commit(record):
-                v = head + 1
-                if v % self.checkpoint_every == 0:
-                    self._write_checkpoint(v)
-                return v
+            return record
+
+        return self._commit_loop(build)
 
     def _write_checkpoint(self, v: int) -> None:
-        """Materialize the full table state (live files, their stats, and
-        per-app streaming epochs) at version ``v``. The state is resolved
-        BEFORE the file is created — a half-written checkpoint must never
-        be readable — and swapped in with an atomic rename."""
-        # seed the epoch map from the previous checkpoint and fold only
-        # the commits after it — rebuilding from version 1 made every
-        # checkpoint O(full log), the exact unbounded-replay cost
-        # checkpoints exist to avoid (live/stats were already bounded;
-        # txns was the outlier)
-        start, _, _ = self._latest_checkpoint(v)
-        if start:
-            with open(self._checkpoint_path(start)) as f:
-                txns = dict(json.load(f).get("txns", {}))
-        else:
-            txns = {}
-        for cv in self._commit_files():
-            if start < cv <= v:
-                t = self._read_commit(cv).get("txn")
-                if t:
-                    txns[t["app"]] = max(txns.get(t["app"], -1), t["epoch"])
-        dvs, dv_deleted = self.dv_state(v)
-        state = {
-            "version": v,
-            "live": self.live_files(v),
-            "stats": self.file_stats(v),
-            "txns": txns,
-            "dvs": dvs,
-            "dv_deleted": dv_deleted,
-        }
+        """Persist the replayed table state at version ``v`` (``_replay``:
+        live files, their stats, per-app streaming epochs, DV state) so
+        later replays start here. The state is resolved BEFORE the file
+        is created — a half-written checkpoint must never be readable —
+        and swapped in with an atomic rename."""
+        state = self._replay(v)
         tmp = os.path.join(self.log_dir, f".cp.{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(state, f)
@@ -1377,13 +1340,8 @@ class TxnTable:
         property, not a file property: an overwrite that drops a column
         does not un-declare it — readers keep seeing it as NULL, exactly
         like the snapshot/catalog backends (and Delta)."""
-        head = self.version() if at_version is None else at_version
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "schema" in c:
-                    return c["schema"]
-        return []
+        c = self._newest("schema", at_version)
+        return copy.deepcopy(c["schema"]) if c else []
 
     # type-widening lattice (round 12; Delta 4.0 ALTER COLUMN type
     # widening / Iceberg schema evolution):
@@ -1872,9 +1830,14 @@ class TxnTable:
             names.append(nm)
         if pcols:
             t._pcols_param = pcols  # declared by the layout itself
-            t._hive_cache = True
-            t._hive_cache_v = 1  # the convert commit below
-        t._commit("convert", names, [], stats, schema=schema)
+        t._commit(
+            "convert",
+            names,
+            [],
+            stats,
+            schema=schema,
+            extra={"hive_origin": True} if pcols else None,
+        )
         return t
 
     def clone(
@@ -2015,11 +1978,8 @@ class TxnTable:
         seeds, merge/rebase replays all carry the field). Log-only."""
         head = self.version() if at_version is None else at_version
         loaded: set[str] = set()
-        for cv in self._commit_files():
-            if cv <= head:
-                cs = self._read_commit(cv).get("copy_sources")
-                if cs:
-                    loaded.update(cs)
+        for _, c in self._commits_in(0, head):
+            loaded.update(c.get("copy_sources") or ())
         return loaded
 
     def copy_into(
@@ -2091,52 +2051,56 @@ class TxnTable:
 
         idents = {p: ident(p) for p in srcs}
         staged: list[str] = []
-        while True:
-            head = self.version()
+        seen: dict = {}
+
+        def build(head: int) -> dict | None:
+            # after a lost race (maybe a COPY of the same files): drop
+            # the staging and re-resolve the ledger from the log
+            for nm in staged:
+                try:
+                    os.unlink(os.path.join(self.data_dir, nm))
+                except FileNotFoundError:
+                    pass
+            staged.clear()
             loaded = self._copy_loaded(head)
             new = [p for p in srcs if force or idents[p] not in loaded]
+            seen.update(head=head, new=new)
             if not new:
-                return {
-                    "version": head,
-                    "files_loaded": 0,
-                    "files_skipped": len(srcs),
-                }
-            if not staged:
-                schema = [
-                    {"name": f.name, "type": json.loads(f.dataType.json())}
-                    for f in spark.read.option("mergeSchema", "true")
-                    .parquet(*new)
-                    .schema.fields
-                ]
-                if self.partition_cols():
-                    # partitioned target: read + re-stage value-pure
-                    # (landing files may mix partition values); stats
-                    # incl. partitionValues come from _stage
-                    add, stats = self._stage(
-                        spark.read.option("mergeSchema", "true").parquet(*new)
-                    )
-                    staged.extend(add)
-                else:
-                    cid = uuid.uuid4().hex
-                    stats = {}
-                    for i, s in enumerate(new):
-                        nm = f"{cid}-y{i}.parquet"
-                        dest = os.path.join(self.data_dir, nm)
-                        try:
-                            os.link(s, dest)
-                        except OSError:
-                            shutil.copy2(s, dest)
-                        st = self._footer_minmax(dest)
-                        for col in self.bloom_cols:
-                            b = _file_bloom(dest, col)
-                            if b is not None:
-                                st[f"__bloom_{col}"] = b
-                        stats[nm] = st
-                        staged.append(nm)
-                # one scan of the staged bytes; deletes them on refusal
-                self._enforce_staged(spark, staged, "copy_into")
-            record = {
-                "version": head + 1,
+                return None
+            schema = [
+                {"name": f.name, "type": json.loads(f.dataType.json())}
+                for f in spark.read.option("mergeSchema", "true")
+                .parquet(*new)
+                .schema.fields
+            ]
+            if self.partition_cols():
+                # partitioned target: read + re-stage value-pure
+                # (landing files may mix partition values); stats
+                # incl. partitionValues come from _stage
+                add, stats = self._stage(
+                    spark.read.option("mergeSchema", "true").parquet(*new)
+                )
+                staged.extend(add)
+            else:
+                cid = uuid.uuid4().hex
+                stats = {}
+                for i, s in enumerate(new):
+                    nm = f"{cid}-y{i}.parquet"
+                    dest = os.path.join(self.data_dir, nm)
+                    try:
+                        os.link(s, dest)
+                    except OSError:
+                        shutil.copy2(s, dest)
+                    st = self._footer_minmax(dest)
+                    for col in self.bloom_cols:
+                        b = _file_bloom(dest, col)
+                        if b is not None:
+                            st[f"__bloom_{col}"] = b
+                    stats[nm] = st
+                    staged.append(nm)
+            # one scan of the staged bytes; deletes them on refusal
+            self._enforce_staged(spark, staged, "copy_into")
+            return {
                 "action": "copy",
                 "add": list(staged),
                 "remove": [],
@@ -2145,26 +2109,16 @@ class TxnTable:
                 "copy_from": src_root,
                 "schema": self._merge_schema_lists(self.table_schema(), schema),
             }
-            self._stamp_props(record)
-            if self._try_commit(record):
-                v = head + 1
-                if v % self.checkpoint_every == 0:
-                    self._write_checkpoint(v)
-                return {
-                    "version": v,
-                    # SOURCE files ingested (on a partitioned target the
-                    # staged value-pure file count can differ)
-                    "files_loaded": len(new),
-                    "files_skipped": len(srcs) - len(new),
-                }
-            # lost the CAS: a concurrent commit landed — maybe a COPY of
-            # the same files. Drop staging and re-resolve from the log.
-            for nm in staged:
-                try:
-                    os.unlink(os.path.join(self.data_dir, nm))
-                except FileNotFoundError:
-                    pass
-            staged = []
+
+        v = self._commit_loop(build)
+        n_new = len(seen["new"])
+        return {
+            "version": seen["head"] if v is None else v,
+            # SOURCE files ingested (on a partitioned target the staged
+            # value-pure file count can differ)
+            "files_loaded": n_new,
+            "files_skipped": len(srcs) - n_new,
+        }
 
     def append(self, df: DataFrame) -> int:
         # defaults before generation (merge's ordering, all write
@@ -2591,38 +2545,9 @@ class TxnTable:
     # metadata: create/delete are CAS commits moving no data.
 
     def tags(self, at_version: int | None = None) -> dict[str, int]:
-        """The table's tags at a version (name -> tagged version).
-        Version-keyed cache with incremental refresh (the pattern of
-        ``partition_cols``/``hive_origin``/``partition_evolved``):
-        ``_stamp_props`` consults this on every commit, so resolution
-        must not walk the whole log per write."""
-        head = self.version() if at_version is None else at_version
-        if at_version is None and self._tags_cache is not None:
-            if head == self._tags_cache_v:
-                return dict(self._tags_cache)
-            for v in reversed(self._commit_files()):
-                if v <= self._tags_cache_v:
-                    break
-                if v <= head:
-                    c = self._read_commit(v)
-                    if "tags" in c:
-                        self._tags_cache = {
-                            k: int(x) for k, x in c["tags"].items()
-                        }
-                        break
-            self._tags_cache_v = head
-            return dict(self._tags_cache)
-        found: dict[str, int] = {}
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "tags" in c:
-                    found = {k: int(x) for k, x in c["tags"].items()}
-                    break
-        if at_version is None:
-            self._tags_cache = dict(found)
-            self._tags_cache_v = head
-        return found
+        """The table's tags at a version (name -> tagged version)."""
+        c = self._newest("tags", at_version)
+        return {k: int(x) for k, x in c["tags"].items()} if c else {}
 
     def create_tag(self, name: str, at_version: int | None = None) -> int:
         """CREATE TAG ``name`` at ``at_version`` (default: the head).
@@ -2637,12 +2562,11 @@ class TxnTable:
         # asked — re-resolving inside a retry would silently pin a
         # racing writer's newer snapshot instead (ADVICE r12)
         target = self.version() if at_version is None else at_version
-        for _ in range(5):
-            head = self.version()
-            v = target
-            if not (1 <= v <= head):
+
+        def build(head: int) -> dict:
+            if not (1 <= target <= head):
                 raise ValueError(
-                    f"create_tag: version {v} is outside the log "
+                    f"create_tag: version {target} is outside the log "
                     f"(1..{head})"
                 )
             cur = self.tags(head)
@@ -2652,41 +2576,23 @@ class TxnTable:
                     f"(-> v{cur[name]}); tags are immutable — "
                     "delete_tag first to move it"
                 )
-            rec = {
-                "version": head + 1,
-                "action": "tag-create",
-                "add": [],
-                "remove": [],
-                "tags": {**cur, name: v},
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return head + 1
-        raise ConcurrentWriteError(
-            "create_tag: lost the commit race 5 times; retry"
-        )
+            return self._meta("tag-create", tags={**cur, name: target})
+
+        return self._commit_loop(build, self._DDL_TRIES, "create_tag")
 
     def delete_tag(self, name: str) -> int:
         """DROP TAG ``name`` (refused if missing). The tagged version's
         files become ordinary vacuum candidates again."""
-        for _ in range(5):
-            head = self.version()
+
+        def build(head: int) -> dict:
             cur = self.tags(head)
             if name not in cur:
                 raise ValueError(f"delete_tag: no tag {name!r}")
-            rec = {
-                "version": head + 1,
-                "action": "tag-delete",
-                "add": [],
-                "remove": [],
-                "tags": {k: x for k, x in cur.items() if k != name},
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return head + 1
-        raise ConcurrentWriteError(
-            "delete_tag: lost the commit race 5 times; retry"
-        )
+            return self._meta(
+                "tag-delete", tags={k: x for k, x in cur.items() if k != name}
+            )
+
+        return self._commit_loop(build, self._DDL_TRIES, "delete_tag")
 
     def read(
         self,
@@ -4004,13 +3910,13 @@ class TxnTable:
         Same-scheme re-declaration is refused loudly (a no-op DDL is a
         caller bug)."""
         cols = tuple(cols)
-        for _ in range(5):
+
+        def build(v0: int) -> dict:
             # validation runs INSIDE the retry loop against the freshly
             # read head (ADVICE r11): after losing a race to a
             # concurrent set_partitioning or drop_column, a retry must
             # not commit a same-scheme re-declaration or a scheme
             # naming a just-dropped column
-            v0 = self.version()
             cur = self.partition_cols(v0)
             if cols == cur:
                 raise ValueError(
@@ -4028,31 +3934,21 @@ class TxnTable:
                     f"set_partitioning: no such column(s) {unknown} "
                     f"(have {sorted(live_cols)})"
                 )
-            rec = {
-                "version": v0 + 1,
-                "action": "partition-evolve",
-                "add": [],
-                "remove": [],
-            }
-            self._stamp_props(rec)
-            # the evolved scheme OVERRIDES the stamped current one; []
-            # is recorded explicitly so resolution never falls through
-            # to an older scheme
-            rec["partition_cols"] = list(cols)
-            rec["partition_evolved"] = True
-            if self._try_commit(rec):
-                self._pevolved_cache = True
-                self._pevolved_cache_v = v0 + 1
-                # this handle's caches and its construction-time param
-                # now describe the new scheme (the param guard otherwise
-                # refuses the very evolution it just performed)
-                self._pcols_cache = cols
-                self._pcols_cache_v = v0 + 1
-                self._pcols_param = cols
-                return v0 + 1
-        raise ConcurrentWriteError(
-            "set_partitioning: lost the commit race 5 times; retry"
-        )
+            # the evolved scheme OVERRIDES the current one (the stamp
+            # keeps it); [] is recorded explicitly so resolution never
+            # falls through to an older scheme
+            return self._meta(
+                "partition-evolve",
+                partition_cols=list(cols),
+                partition_evolved=True,
+            )
+
+        v = self._commit_loop(build, self._DDL_TRIES, "set_partitioning")
+        # this handle's construction-time param now describes the new
+        # scheme (the param guard otherwise refuses the very evolution
+        # it just performed)
+        self._pcols_param = cols
+        return v
 
     # ------------------------------------------------------------------
     # CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT): a LOG
@@ -4070,13 +3966,8 @@ class TxnTable:
     def constraints(self, at_version: int | None = None) -> dict[str, str]:
         """The table's CHECK constraints at a version (name -> SQL
         expression), replayed from the log like ``table_schema``."""
-        head = self.version() if at_version is None else at_version
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "constraints" in c:
-                    return dict(c["constraints"])
-        return {}
+        c = self._newest("constraints", at_version)
+        return dict(c["constraints"]) if c else {}
 
     def add_constraint(self, spark: SparkSession, name: str, expr: str) -> int:
         """ADD CONSTRAINT name CHECK (expr). Existing rows are validated
@@ -4088,8 +3979,7 @@ class TxnTable:
         constraint change."""
         from spark_data_engineering_spark.checks import CheckError
 
-        for _ in range(5):
-            v0 = self.version()
+        def build(v0: int) -> dict:
             cur = self.constraints(v0)
             if name in cur:
                 raise ValueError(
@@ -4104,40 +3994,23 @@ class TxnTable:
                         f"cannot add constraint {name!r}: existing data "
                         f"violates it ({viol[name]} rows fail {expr!r})"
                     )
-            rec = {
-                "version": v0 + 1,
-                "action": "constraint-add",
-                "add": [],
-                "remove": [],
-                "constraints": {**cur, name: expr},
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return v0 + 1
-        raise ConcurrentWriteError(
-            "add_constraint: lost the commit race 5 times; retry"
-        )
+            return self._meta("constraint-add", constraints={**cur, name: expr})
+
+        return self._commit_loop(build, self._DDL_TRIES, "add_constraint")
 
     def drop_constraint(self, name: str) -> int:
         """DROP CONSTRAINT name — metadata-only, CAS-linearized."""
-        for _ in range(5):
-            v0 = self.version()
+
+        def build(v0: int) -> dict:
             cur = self.constraints(v0)
             if name not in cur:
                 raise ValueError(f"no constraint {name!r} (have {sorted(cur)})")
-            rec = {
-                "version": v0 + 1,
-                "action": "constraint-drop",
-                "add": [],
-                "remove": [],
-                "constraints": {k: e for k, e in cur.items() if k != name},
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return v0 + 1
-        raise ConcurrentWriteError(
-            "drop_constraint: lost the commit race 5 times; retry"
-        )
+            return self._meta(
+                "constraint-drop",
+                constraints={k: e for k, e in cur.items() if k != name},
+            )
+
+        return self._commit_loop(build, self._DDL_TRIES, "drop_constraint")
 
     # user-defined table properties (Delta TBLPROPERTIES): a LOG
     # property like constraints — the latest commit carrying a
@@ -4154,13 +4027,8 @@ class TxnTable:
     def properties(self, at_version: int | None = None) -> dict[str, str]:
         """The table's user properties at a version (key -> value),
         replayed from the log like ``constraints``."""
-        head = self.version() if at_version is None else at_version
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "properties" in c:
-                    return dict(c["properties"])
-        return {}
+        c = self._newest("properties", at_version)
+        return dict(c["properties"]) if c else {}
 
     def set_properties(self, props: dict[str, str]) -> int:
         """ALTER TABLE SET TBLPROPERTIES — metadata-only, CAS-linearized
@@ -4169,23 +4037,16 @@ class TxnTable:
         bad = [k for k in props if not isinstance(k, str) or not k]
         if bad:
             raise ValueError(f"property keys must be non-empty strings: {bad}")
-        for _ in range(5):
-            v0 = self.version()
-            rec = {
-                "version": v0 + 1,
-                "action": "properties-set",
-                "add": [],
-                "remove": [],
-                "properties": {
+        return self._commit_loop(
+            lambda v0: self._meta(
+                "properties-set",
+                properties={
                     **self.properties(v0),
                     **{k: str(v) for k, v in props.items()},
                 },
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return v0 + 1
-        raise ConcurrentWriteError(
-            "set_properties: lost the commit race 5 times; retry"
+            ),
+            self._DDL_TRIES,
+            "set_properties",
         )
 
     def analyze(
@@ -4453,22 +4314,18 @@ class TxnTable:
                     "bins": nbk,
                     "buckets": buckets,
                 }
-        for _ in range(5):
-            v0 = self.version()
-            rec = {
-                "version": v0 + 1,
-                "action": "analyze",
-                "add": [],
-                "remove": [],
-                "column_stats": stats,
-                "analyze_rows": int(row["__n"]),
-                "analyze_snapshot": v_snap,
-                "analyze_approx": bool(approx),
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return stats
-        raise ConcurrentWriteError("analyze: lost the commit race 5 times")
+        self._commit_loop(
+            lambda v0: self._meta(
+                "analyze",
+                column_stats=stats,
+                analyze_rows=int(row["__n"]),
+                analyze_snapshot=v_snap,
+                analyze_approx=bool(approx),
+            ),
+            self._DDL_TRIES,
+            "analyze",
+        )
+        return stats
 
     def column_stats(self, at_version: int | None = None) -> dict:
         """The newest ANALYZE payload at a version: ``{"columns":
@@ -4476,18 +4333,15 @@ class TxnTable:
         "snapshot": v, "approx": bool}`` — or ``{}`` if the table was
         never analyzed. Resolution mirrors ``properties`` (latest
         commit carrying the field wins)."""
-        head = self.version() if at_version is None else at_version
-        for v in reversed(self._commit_files()):
-            if v <= head:
-                c = self._read_commit(v)
-                if "column_stats" in c:
-                    return {
-                        "columns": dict(c["column_stats"]),
-                        "rows": c.get("analyze_rows"),
-                        "snapshot": c.get("analyze_snapshot"),
-                        "approx": c.get("analyze_approx", False),
-                    }
-        return {}
+        c = self._newest("column_stats", at_version)
+        if c is None:
+            return {}
+        return {
+            "columns": copy.deepcopy(c["column_stats"]),
+            "rows": c.get("analyze_rows"),
+            "snapshot": c.get("analyze_snapshot"),
+            "approx": c.get("analyze_approx", False),
+        }
 
     # commit actions that cannot change the table's VISIBLE row count:
     # pure metadata DDL, stats, DV-sidecar maintenance (drops only
@@ -4544,8 +4398,8 @@ class TxnTable:
     def unset_properties(self, keys: "list[str] | tuple[str, ...]") -> int:
         """ALTER TABLE UNSET TBLPROPERTIES — unknown keys refused loudly
         (Delta's IF EXISTS is the caller filtering first)."""
-        for _ in range(5):
-            v0 = self.version()
+
+        def build(v0: int) -> dict:
             cur = self.properties(v0)
             missing = [k for k in keys if k not in cur]
             if missing:
@@ -4553,19 +4407,12 @@ class TxnTable:
                     f"no such propert{'y' if len(missing) == 1 else 'ies'} "
                     f"{missing} (have {sorted(cur)})"
                 )
-            rec = {
-                "version": v0 + 1,
-                "action": "properties-unset",
-                "add": [],
-                "remove": [],
-                "properties": {k: v for k, v in cur.items() if k not in keys},
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return v0 + 1
-        raise ConcurrentWriteError(
-            "unset_properties: lost the commit race 5 times; retry"
-        )
+            return self._meta(
+                "properties-unset",
+                properties={k: v for k, v in cur.items() if k not in keys},
+            )
+
+        return self._commit_loop(build, self._DDL_TRIES, "unset_properties")
 
     def _refuse_contract_ref(self, col: str, what: str) -> None:
         """Refuse renaming/dropping a column the table's WRITE CONTRACT
@@ -5057,9 +4904,8 @@ class TxnTable:
         # longer apply to anything — they neither block a restore (the
         # loop below) nor survive one
         pruned: set[str] = set()
-        for v in self._commit_files():
-            if v <= head:
-                pruned.update(self._read_commit(v).get("dv_remove", ()))
+        for _, c in self._commits_in(0, head):
+            pruned.update(c.get("dv_remove", ()))
         for v in range(version + 1, head + 1):
             c = self._read_commit(v)
             if c.get("dv_add") and c["dv_add"] not in pruned:
@@ -5176,17 +5022,12 @@ class TxnTable:
         prunable."""
         import pyarrow.parquet as pq
 
-        while True:
-            head = self.version()
-            if head == 0:
-                return None
-            sidecars, _ = self.dv_state(head)
-            if not sidecars:
-                return None
-            live = set(self.live_files(head))
+        def build(head: int) -> dict | None:
+            state = self._replay(head)
+            live = set(state["live"])
             dead_names: list[str] = []
             dead_files: set[str] = set()
-            for s in sidecars:
+            for s in state["dvs"]:
                 fs = set(
                     pq.read_table(
                         os.path.join(self.dv_dir, s), columns=["file"]
@@ -5199,20 +5040,14 @@ class TxnTable:
                     dead_files |= fs
             if not dead_names:
                 return None
-            rec = {
-                "version": head + 1,
-                "action": "dv-prune",
-                "add": [],
-                "remove": [],
-                "dv_remove": sorted(dead_names),
-                "dv_remove_files": sorted(dead_files),
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                if (head + 1) % self.checkpoint_every == 0:
-                    self._write_checkpoint(head + 1)
-                return head + 1
-            # lost the race: recompute deadness against the new head
+            return self._meta(
+                "dv-prune",
+                dv_remove=sorted(dead_names),
+                dv_remove_files=sorted(dead_files),
+            )
+
+        # a lost race recomputes deadness against the new head
+        return self._commit_loop(build)
 
     def vacuum(
         self,
@@ -5671,36 +5506,24 @@ class TxnTable:
         and ``analyzed_rows`` freshness all carry across it."""
         import pyarrow.parquet as pq
 
-        for _ in range(5):
-            v0 = self.version()
-            stats = self.file_stats(v0) if v0 else {}
+        repaired: dict = {}
+
+        def build(v0: int) -> dict | None:
             gaps = {
                 f: st
-                for f, st in stats.items()
+                for f, st in (self.file_stats(v0) if v0 else {}).items()
                 if st.get("__num_rows") is None
             }
             if not gaps:
-                return {"repaired": 0, "version": None}
-            patched: dict[str, dict] = {}
+                return None
+            repaired.clear()
             for f, st in sorted(gaps.items()):
-                md = pq.ParquetFile(
-                    os.path.join(self.data_dir, f)
-                ).metadata
-                n = md.num_rows
-                patched[f] = {**st, "__num_rows": [n, n]}
-            rec = {
-                "version": v0 + 1,
-                "action": "repair-stats",
-                "add": [],
-                "remove": [],
-                "stats": patched,
-            }
-            self._stamp_props(rec)
-            if self._try_commit(rec):
-                return {"repaired": len(patched), "version": v0 + 1}
-        raise ConcurrentWriteError(
-            "repair_stats: lost the commit race 5 times; retry"
-        )
+                n = pq.ParquetFile(os.path.join(self.data_dir, f)).metadata.num_rows
+                repaired[f] = {**st, "__num_rows": [n, n]}
+            return self._meta("repair-stats", stats=dict(repaired))
+
+        v = self._commit_loop(build, self._DDL_TRIES, "repair_stats")
+        return {"repaired": len(repaired) if v else 0, "version": v}
 
     def history(self) -> list[dict]:
         return [self._read_commit(v) for v in self._commit_files()]
@@ -5878,19 +5701,7 @@ class TxnTable:
         """Highest epoch committed by ``app_id`` — replayed from the
         nearest checkpoint like the file set, so recovery cost stays
         O(commits since checkpoint) no matter how long the stream ran."""
-        head = self.version()
-        start, _, _ = self._latest_checkpoint(head)
-        if start:
-            with open(self._checkpoint_path(start)) as f:
-                last = json.load(f).get("txns", {}).get(app_id, -1)
-        else:
-            last = -1
-        for v in self._commit_files():
-            if start < v <= head:
-                txn = self._read_commit(v).get("txn")
-                if txn and txn["app"] == app_id:
-                    last = max(last, txn["epoch"])
-        return last
+        return self._replay()["txns"].get(app_id, -1)
 
     def append_idempotent(self, df: DataFrame, app_id: str, epoch_id: int) -> int | None:
         """Exactly-once micro-batch append: a replayed epoch (foreachBatch
@@ -5907,56 +5718,23 @@ class TxnTable:
         schema = self._merged_schema(df)
         add, stats = self._stage(df)
         self._enforce_staged(df.sparkSession, add, "append_idempotent")
-        while True:
-            head = self.version()
-            # re-check under the current head: a racing replica of the
-            # same stream may have landed this epoch after our first look
-            if epoch_id <= self.last_epoch(app_id):
-                for name in add:
-                    os.unlink(os.path.join(self.data_dir, name))
-                return None
-            if id_high:
-                # mirrors _commit's identity conflict window: a
-                # concurrent allocation from the same watermark means
-                # the staged bytes carry colliding ids — refuse
-                for cv in self._commit_files():
-                    if v0id < cv <= head:
-                        other = self._read_commit(cv).get("identity_high") or {}
-                        if set(id_high).intersection(other):
-                            raise ConcurrentWriteError(
-                                "append_idempotent conflicts: a concurrent "
-                                "write allocated identity values from the "
-                                "same watermark; re-run the write"
-                            )
-            record = {
-                "version": head + 1,
-                "action": "streaming-append",
-                "add": add,
-                "remove": [],
-                "stats": stats,
-                "txn": {"app": app_id, "epoch": epoch_id},
-                # fold over the CURRENT head's schema inside the retry
-                # loop (mirrors _commit): a concurrent writer's column
-                # addition landing between our schema snapshot and our
-                # winning commit must not be dropped from the log head
-                "schema": self._merge_schema_lists(self.table_schema(), schema),
-            }
-            # mirrors _commit: this record CAN be the table's first —
-            # without the props, a partitioned table bootstrapped by a
-            # stream resolves as unpartitioned from every fresh handle
-            # (branch seeds, the datasource, vacuum), mixing layouts
-            # (model-search finding, round 8)
-            self._stamp_props(record)
-            if id_high:
-                cur = self.identity_high()
-                record["identity_high"] = {
-                    c: max(v, cur.get(c, v)) for c, v in id_high.items()
-                }
-            if self._try_commit(record):
-                v = head + 1
-                if v % self.checkpoint_every == 0:
-                    self._write_checkpoint(v)
-                return v
+        v = self._commit(
+            "streaming-append",
+            add,
+            [],
+            stats,
+            txn=(app_id, epoch_id),
+            schema=schema,
+            identity_high=id_high,
+            identity_base_version=v0id if id_high else None,
+            idempotent=True,
+        )
+        if v is None:
+            # a racing replica of the same stream landed this epoch
+            # after our first look: its staged files are orphans
+            for name in add:
+                os.unlink(os.path.join(self.data_dir, name))
+        return v
 
     # ---- branches (Nessie/LakeFS-style zero-copy) -----------------------
 
@@ -6139,10 +5917,7 @@ class TxnTable:
         parent_removed: set[str] = set()
         parent_dv: set[str] = set()
         parent_idalloc = False
-        for cv in self._commit_files():
-            if not (base_v < cv <= head):
-                continue
-            rec = self._read_commit(cv)
+        for _, rec in self._commits_in(base_v, head):
             if rec.get("action") in ("constraint-add", "constraint-drop"):
                 raise ValueError(
                     "rebase_branch: the parent changed CHECK constraints "

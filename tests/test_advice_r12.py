@@ -1,15 +1,8 @@
-"""Round-13 regressions for the three ADVICE r12 findings:
-
-1. (low) ``widen_column``'s partition-column guard runs inside the
-   CAS retry: a concurrent ``set_partitioning`` naming the column
-   between the call and the commit must make the retry REFUSE, not
-   land a widened partition column whose recorded partitionValues /
-   pruning metadata are keyed by the old type.
-2. (low) ``create_tag(at_version=None)`` resolves its target ONCE
-   before the retry loop: after losing a commit race the tag must pin
-   the head the caller saw, not the racing writer's newer snapshot.
-3. (low) ``bench.canary_baseline`` degrades to None on a malformed /
-   key-missing baseline file instead of raising at cnorm time.
+"""Round-13 regression for ADVICE r12 finding 3: ``bench.canary_baseline``
+degrades to None on a malformed / key-missing baseline file instead of
+raising at cnorm time. (Findings 1 and 2 — the ``widen_column`` and
+``create_tag`` commit races — are tested in ``test_txn_widen_column.py``
+and ``test_txn_tags.py``.)
 """
 
 from __future__ import annotations
@@ -17,125 +10,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import Row
-
-from spark_data_engineering_spark.sources.txn import TxnTable
-
-
-def _rows(spark, pairs):
-    return spark.createDataFrame(
-        [Row(k=k, v=v) for k, v in pairs], "k int, v string"
-    )
-
-
-# ---- 1: widen-vs-set_partitioning TOCTOU -------------------------------
-
-
-def test_widen_refuses_when_concurrent_evolve_names_the_column(
-    spark, tmp_path
-):
-    """Interleave a ``set_partitioning(("k",))`` between widen_column's
-    first commit attempt and its retry: the first attempt loses the CAS
-    (the evolve claimed the version), and the retry's schema_transform
-    — replayed against the fresh head — must now see ``k`` as a
-    partition column and refuse."""
-    t = TxnTable(str(tmp_path), "t")
-    t.append(_rows(spark, [(1, "a"), (2, "b")]))
-
-    racer = TxnTable(str(tmp_path), "t")
-    orig = t._try_commit
-    fired = {"n": 0}
-
-    def interleaved(record):
-        if record.get("action") == "widen_column" and fired["n"] == 0:
-            fired["n"] += 1
-            racer.set_partitioning(spark, ("k",))
-        return orig(record)
-
-    t._try_commit = interleaved
-    try:
-        with pytest.raises(ValueError, match="partition column"):
-            t.widen_column(spark, "k", "bigint")
-    finally:
-        t._try_commit = orig
-    assert fired["n"] == 1  # the race actually fired
-    # the evolve is the head commit; no widen landed after it
-    fresh = TxnTable(str(tmp_path), "t")
-    assert fresh.partition_cols() == ("k",)
-    assert [f["type"] for f in fresh.table_schema() if f["name"] == "k"] == [
-        "integer"
-    ]
-
-
-def test_widen_nonpartition_column_survives_lost_race(spark, tmp_path):
-    """The retry itself still works: losing the CAS to a concurrent
-    APPEND (which does not touch partitioning) retries and lands the
-    widen."""
-    t = TxnTable(str(tmp_path), "t")
-    t.append(_rows(spark, [(1, "a")]))
-
-    racer = TxnTable(str(tmp_path), "t")
-    orig = t._try_commit
-    fired = {"n": 0}
-
-    def interleaved(record):
-        if record.get("action") == "widen_column" and fired["n"] == 0:
-            fired["n"] += 1
-            racer.append(_rows(spark, [(2, "b")]))
-        return orig(record)
-
-    t._try_commit = interleaved
-    try:
-        t.widen_column(spark, "k", "bigint")
-    finally:
-        t._try_commit = orig
-    assert fired["n"] == 1
-    fresh = TxnTable(str(tmp_path), "t")
-    assert [f["type"] for f in fresh.table_schema() if f["name"] == "k"] == [
-        "long"
-    ]
-    assert fresh.read(spark).count() == 2
-
-
-# ---- 2: create_tag pins the caller-visible head ------------------------
-
-
-def test_create_tag_pins_pre_race_head_after_lost_cas(spark, tmp_path):
-    t = TxnTable(str(tmp_path), "t")
-    t.append(_rows(spark, [(1, "a")]))
-    v_seen = t.version()
-
-    racer = TxnTable(str(tmp_path), "t")
-    orig = t._try_commit
-    fired = {"n": 0}
-
-    def interleaved(record):
-        if record.get("action") == "tag-create" and fired["n"] == 0:
-            fired["n"] += 1
-            racer.append(_rows(spark, [(2, "b")]))  # advances head
-        return orig(record)
-
-    t._try_commit = interleaved
-    try:
-        t.create_tag("release")
-    finally:
-        t._try_commit = orig
-    assert fired["n"] == 1
-    fresh = TxnTable(str(tmp_path), "t")
-    # the tag pins the head the caller saw (1 row), not the racer's
-    assert fresh.tags()["release"] == v_seen
-    assert fresh.read(spark, tag="release").count() == 1
-
-
-def test_create_tag_explicit_version_unchanged_by_race(spark, tmp_path):
-    t = TxnTable(str(tmp_path), "t")
-    t.append(_rows(spark, [(1, "a")]))
-    t.append(_rows(spark, [(2, "b")]))
-    t.create_tag("v1", at_version=1)
-    assert TxnTable(str(tmp_path), "t").tags()["v1"] == 1
-
-
-# ---- 3: canary_baseline degrades on malformed files --------------------
 
 
 @pytest.mark.parametrize(

@@ -254,3 +254,23 @@ def test_snapshot_vacuum_repairs_crashed_compact(spark, tmp_path):
     assert not any(
         d.startswith(".compact_") for d in os.listdir(store.path("t"))
     )
+
+
+def test_snapshot_vacuum_sweeps_crashed_write_staging(spark, tmp_path):
+    """A writer killed between its staged write and the rename leaves
+    ``_staging-<batch>``; readers ignore it and vacuum removes it,
+    leaving every published batch alone."""
+    import datetime as dt
+    import os
+
+    from spark_data_engineering_spark.sources.snapshot import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path))
+    store.write("t", spark.range(3), dt.datetime(2024, 1, 1))
+    crashed = os.path.join(store.path("t"), "_staging-20240102T000000.000000")
+    spark.range(7).write.parquet(crashed)
+    assert store.read_latest(spark, "t").count() == 3
+    assert store.vacuum("t") == []
+    assert not os.path.exists(crashed)
+    assert store.batches("t") == ["20240101T000000.000000"]
+    assert store.read_latest(spark, "t").count() == 3

@@ -169,3 +169,18 @@ def test_connector_writer_refuses_generated_tables(spark, tmp_path):
         _df(spark, [(9, "x", 9.0)]).withColumn(
             "y", F.col("id") * 10 + 1
         ).write.format("txn").mode("append").save(t.table_dir)
+
+
+def test_handle_that_resolved_before_creation_generates(spark, tmp_path):
+    """A handle that resolved the (empty) generation map before another
+    handle created the table must pick the declaration up on its next
+    write: the head property cache is version-keyed, so the new commit
+    refreshes it instead of leaving the column uncomputed (NULL)."""
+    a = TxnTable(str(tmp_path), "t")
+    assert a.generated_cols() == {}
+    b = TxnTable(str(tmp_path), "t", generated_cols={"g": "x * 2"})
+    b.append(spark.createDataFrame([(1,), (2,)], "x bigint"))
+    a.append(spark.createDataFrame([(3,), (4,)], "x bigint"))
+    fresh = TxnTable(str(tmp_path), "t")
+    got = sorted((r.x, r.g) for r in fresh.read(spark).collect())
+    assert got == [(1, 2), (2, 4), (3, 6), (4, 8)]

@@ -224,3 +224,19 @@ def test_merge_insert_as_first_commit_keeps_identity_schema(spark, tmp_path):
         (0, 1),
         (5, 2),
     ]
+
+
+def test_handle_that_resolved_before_creation_allocates(spark, tmp_path):
+    """A handle that resolved the (empty) identity spec before another
+    handle created the table must allocate ids on its next write,
+    contiguous after the creator's, instead of writing NULL ids."""
+    a = TxnTable(str(tmp_path), "t")
+    assert a.identity_cols() == {}
+    b = TxnTable(str(tmp_path), "t", identity_cols=IDS)
+    b.append(_df(spark, [10, 20]))
+    a.append(_df(spark, [30, 40]))
+    got = _pairs(spark, TxnTable(str(tmp_path), "t"))
+    ids = [r for _, r in got]
+    assert None not in ids, got
+    assert sorted(ids) == [1, 2, 3, 4]
+    assert sorted(r for v, r in got if v >= 30) == [3, 4]

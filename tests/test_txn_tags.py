@@ -102,3 +102,41 @@ def test_tags_are_restamped_near_the_head(spark, tmp_path):
     t.append(_df(spark, 4))
     fresh = TxnTable(str(tmp_path), "t")
     assert fresh.tags() == {}, "a stale handle resurrected a deleted tag"
+
+
+def test_create_tag_pins_pre_race_head_after_lost_cas(spark, tmp_path):
+    """ADVICE r12: ``create_tag(at_version=None)`` resolves its target
+    ONCE, before the commit loop — after losing a commit race the tag
+    pins the head the caller saw, not the racing writer's snapshot."""
+    t = TxnTable(str(tmp_path), "t")
+    t.append(_df(spark, 1))
+    v_seen = t.version()
+
+    racer = TxnTable(str(tmp_path), "t")
+    orig = t._try_commit
+    fired = {"n": 0}
+
+    def interleaved(record):
+        if record.get("action") == "tag-create" and fired["n"] == 0:
+            fired["n"] += 1
+            racer.append(_df(spark, 2))  # advances head
+        return orig(record)
+
+    t._try_commit = interleaved
+    try:
+        t.create_tag("release")
+    finally:
+        t._try_commit = orig
+    assert fired["n"] == 1
+    fresh = TxnTable(str(tmp_path), "t")
+    # the tag pins the head the caller saw (1 row), not the racer's
+    assert fresh.tags()["release"] == v_seen
+    assert fresh.read(spark, tag="release").count() == 1
+
+
+def test_create_tag_explicit_version_unchanged_by_race(spark, tmp_path):
+    t = TxnTable(str(tmp_path), "t")
+    t.append(_df(spark, 1))
+    t.append(_df(spark, 2))
+    t.create_tag("v1", at_version=1)
+    assert TxnTable(str(tmp_path), "t").tags()["v1"] == 1

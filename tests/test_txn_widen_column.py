@@ -262,3 +262,70 @@ def test_stream_aborts_on_mid_stream_widen(spark, tmp_path):
     end = reader.latestOffset()
     with pytest.raises(RuntimeError, match="widen_column.*restart"):
         reader.partitions(start, end)
+
+
+def test_widen_refuses_when_concurrent_evolve_names_the_column(
+    spark, tmp_path
+):
+    """Interleave a ``set_partitioning(("k",))`` between widen_column's
+    first commit attempt and its retry: the first attempt loses the CAS
+    (the evolve claimed the version), and the retry's schema_transform
+    — replayed against the fresh head — must now see ``k`` as a
+    partition column and refuse (ADVICE r12: the guard runs inside the
+    commit loop, not before it)."""
+    t = TxnTable(str(tmp_path), "t")
+    t.append(_ints(spark, 1, 2))
+
+    racer = TxnTable(str(tmp_path), "t")
+    orig = t._try_commit
+    fired = {"n": 0}
+
+    def interleaved(record):
+        if record.get("action") == "widen_column" and fired["n"] == 0:
+            fired["n"] += 1
+            racer.set_partitioning(spark, ("k",))
+        return orig(record)
+
+    t._try_commit = interleaved
+    try:
+        with pytest.raises(ValueError, match="partition column"):
+            t.widen_column(spark, "k", "bigint")
+    finally:
+        t._try_commit = orig
+    assert fired["n"] == 1  # the race actually fired
+    # the evolve is the head commit; no widen landed after it
+    fresh = TxnTable(str(tmp_path), "t")
+    assert fresh.partition_cols() == ("k",)
+    assert [f["type"] for f in fresh.table_schema() if f["name"] == "k"] == [
+        "integer"
+    ]
+
+
+def test_widen_nonpartition_column_survives_lost_race(spark, tmp_path):
+    """The retry itself still works: losing the CAS to a concurrent
+    APPEND (which does not touch partitioning) retries and lands the
+    widen."""
+    t = TxnTable(str(tmp_path), "t")
+    t.append(_ints(spark, 1))
+
+    racer = TxnTable(str(tmp_path), "t")
+    orig = t._try_commit
+    fired = {"n": 0}
+
+    def interleaved(record):
+        if record.get("action") == "widen_column" and fired["n"] == 0:
+            fired["n"] += 1
+            racer.append(_ints(spark, 2))
+        return orig(record)
+
+    t._try_commit = interleaved
+    try:
+        t.widen_column(spark, "k", "bigint")
+    finally:
+        t._try_commit = orig
+    assert fired["n"] == 1
+    fresh = TxnTable(str(tmp_path), "t")
+    assert [f["type"] for f in fresh.table_schema() if f["name"] == "k"] == [
+        "long"
+    ]
+    assert fresh.read(spark).count() == 2
